@@ -3,16 +3,15 @@
 Every corpus is a pure function of the workload seed: pages come from
 ``tildener_spark.datagen.gen_doc`` (the engine's own generator, the
 function ``pages_df`` maps over ``spark.range``), whose gold triples
-fall out of generation.  The benchmark generates them in a pool of
-plain Python processes and writes parquet with pyarrow, so set-up
-does not pay Spark's cold job path; the engine then reads the five
-page columns and nothing else, and the gold column stays with the
-checker.
+fall out of generation.  The benchmark generates them in its own
+process (~0.6 ms a page, no helper processes) and writes parquet with
+pyarrow, so set-up does not pay Spark's cold job path; the engine then
+reads the five page columns and nothing else, and the gold column
+stays with the checker.
 """
 
 from __future__ import annotations
 
-import multiprocessing
 import os
 import random
 
@@ -63,28 +62,9 @@ def long_page_mix(n_pages: int, seed: int) -> list[int]:
     return ks
 
 
-def _gen(job: tuple[int, int, int]) -> list[dict]:
-    lo, hi, seed = job
-    return [dict(gen_doc(i, seed), doc_id=i) for i in range(lo, hi)]
-
-
-class Generator:
-    """A spawn pool of generator processes; close() stops them."""
-
-    def __init__(self, procs: int):
-        self.procs = procs
-        self._pool = multiprocessing.get_context("spawn").Pool(procs)
-
-    def docs(self, n_docs: int, seed: int) -> list[dict]:
-        """gen_doc(i, seed) for i in [0, n_docs), in id order."""
-        step = -(-n_docs // (self.procs * 4))
-        jobs = [(lo, min(lo + step, n_docs), seed)
-                for lo in range(0, n_docs, step)]
-        return [d for chunk in self._pool.map(_gen, jobs) for d in chunk]
-
-    def close(self) -> None:
-        self._pool.close()
-        self._pool.join()
+def docs(n_docs: int, seed: int) -> list[dict]:
+    """gen_doc(i, seed) for i in [0, n_docs), in id order."""
+    return [dict(gen_doc(i, seed), doc_id=i) for i in range(n_docs)]
 
 
 def _write(path: str, files: list[list[dict]]) -> None:
@@ -99,23 +79,22 @@ def _deal(rows: list, n_files: int) -> list[list]:
     return [rows[i::n_files] for i in range(n_files)]
 
 
-def write_short(gen: Generator, path: str, n_docs: int, seed: int,
-                n_files: int) -> None:
+def write_short(path: str, n_docs: int, seed: int, n_files: int) -> None:
     """n_docs generated pages (~600 characters each) with gold."""
-    _write(path, _deal(gen.docs(n_docs, seed), n_files))
+    _write(path, _deal(docs(n_docs, seed), n_files))
 
 
-def write_long(gen: Generator, path: str, n_pages: int, seed: int,
+def write_long(path: str, n_pages: int, seed: int,
                n_files: int) -> list[int]:
     """n_pages long pages, each the blank-line join of k consecutive
     generated pages (k from :func:`long_page_mix`).  Gold triples are
     the constituents' gold moved to the long page's url.  Returns the
     k mix."""
     ks = long_page_mix(n_pages, seed)
-    docs = gen.docs(sum(ks), seed)
+    made = docs(sum(ks), seed)
     pages, at = [], 0
     for page, k in enumerate(ks):
-        parts, at = docs[at:at + k], at + k
+        parts, at = made[at:at + k], at + k
         url = f"{LONG_URL}{page}"
         text = LONG_SEP.join(d["text"] for d in parts)
         pages.append({
@@ -133,15 +112,13 @@ def write_long(gen: Generator, path: str, n_pages: int, seed: int,
     return ks
 
 
-def write_recrawl(gen: Generator, path_v1: str, path_v2: str,
-                  n_docs: int, n_recrawled: int, seed: int,
-                  n_files: int) -> None:
+def write_recrawl(path_v1: str, path_v2: str, n_docs: int,
+                  n_recrawled: int, seed: int, n_files: int) -> None:
     """First-crawl versions of doc ids [0, n_docs) and re-crawled
     versions of ids [0, n_recrawled): the same urls, pages generated
     under another seed."""
-    write_short(gen, path_v1, n_docs, seed, n_files)
-    write_short(gen, path_v2, n_recrawled, seed + RECRAWL_SEED_OFFSET,
-                n_files)
+    write_short(path_v1, n_docs, seed, n_files)
+    write_short(path_v2, n_recrawled, seed + RECRAWL_SEED_OFFSET, n_files)
 
 
 def pages_of(corpus: DataFrame) -> DataFrame:

@@ -1,7 +1,7 @@
 """KG engine benchmark of record.
 
     python3 perfbench/run.py --workload long_pages --seed 1 \
-        --seconds 20 --trace 0
+        --seconds 5 --trace 0
 
 Runs one workload (see workloads.py and README.md) through the public
 API at local[<cores>] in a fresh Spark session, checks every output,
@@ -13,20 +13,26 @@ and reports the per-layer metrics instead.
 Works from any working directory: the engine is imported from the
 checkout that holds this file, and Python workers get the same path.
 Everything the run writes goes under ``<checkout>/.perfbench_work``
-and is removed at the end.
+and is removed at the end.  Every process the run starts (the JVM,
+Spark's Python worker daemon and its workers) has ended before it
+exits, on every path out of it: see :func:`_reap_children`.
 """
 
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
+import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+RSS_PERIOD_S = 0.5
 WORKLOADS = ("batch_short", "long_pages", "recrawl_epochs")
 
 END_TO_END = {
@@ -95,9 +101,8 @@ def host_resources() -> tuple[int, int]:
     return cores, max(1024, mem_mb)
 
 
-def peak_rss_mb() -> float:
-    """Sum of peak resident sets (VmHWM) over this process and every
-    live descendant: the JVM driver and its Python workers."""
+def _proc_children() -> dict[int, list[int]]:
+    """{pid: child pids} over every process in /proc."""
     children: dict[int, list[int]] = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
@@ -108,18 +113,55 @@ def peak_rss_mb() -> float:
         except (OSError, IndexError, ValueError):
             continue
         children.setdefault(ppid, []).append(int(d))
-    total_kb, todo = 0, [os.getpid()]
+    return children
+
+
+def tree_rss_kb() -> dict[int, int]:
+    """{pid: resident set (VmRSS) in KB} for this process and every
+    descendant: the JVM driver and Spark's Python workers."""
+    children = _proc_children()
+    out, todo = {}, [os.getpid()]
     while todo:
         pid = todo.pop()
         todo.extend(children.get(pid, []))
         try:
             with open(f"/proc/{pid}/status") as f:
                 for line in f:
-                    if line.startswith("VmHWM:"):
-                        total_kb += int(line.split()[1])
+                    if line.startswith("VmRSS:"):
+                        out[pid] = int(line.split()[1])
         except OSError:
             continue
-    return total_kb / 1024
+    return out
+
+
+class PeakRss(threading.Thread):
+    """Samples :func:`tree_rss_kb` every RSS_PERIOD_S until stopped;
+    ``peak_mb`` is the largest summed RSS seen.  Sampling the tree's
+    total counts Python workers that exit before the run ends, and
+    never adds up per-process peaks reached at different times.  A
+    sample counts only processes already present in the one before:
+    a child the JVM spawns shares the JVM's memory, and reports all of
+    its RSS, until it execs a few milliseconds later."""
+
+    def __init__(self):
+        super().__init__(daemon=True)
+        self.peak_mb = 0.0
+        self._done = threading.Event()
+
+    def run(self) -> None:
+        seen: set[int] = set()
+        while True:
+            rss = tree_rss_kb()
+            total = sum(kb for pid, kb in rss.items() if pid in seen)
+            self.peak_mb = max(self.peak_mb, total / 1024)
+            seen = set(rss)
+            if self._done.wait(RSS_PERIOD_S):
+                return
+
+    def stop(self) -> float:
+        self._done.set()
+        self.join()
+        return self.peak_mb
 
 
 def _end_to_end(out, rss_mb: float) -> dict:
@@ -136,6 +178,52 @@ def _end_to_end(out, rss_mb: float) -> dict:
         "triple_recall": out.recall,
         "peak_rss_mb": rss_mb,
     }
+
+
+PR_SET_CHILD_SUBREAPER = 36
+REAP_GRACE_S = 20.0
+
+
+def _become_subreaper() -> None:
+    """Adopt every orphaned descendant: when the JVM exits, Spark's
+    Python worker daemon and its workers become this process's
+    children instead of init's, so they can be waited for."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def _children() -> list[int]:
+    return _proc_children().get(os.getpid(), [])
+
+
+def _reap_children() -> None:
+    """Wait until this process has no child left, adopted orphans
+    included.  Children still running after REAP_GRACE_S get SIGTERM,
+    and SIGKILL five seconds later."""
+    signal.signal(signal.SIGTERM, signal.SIG_IGN)
+    deadline = time.monotonic() + REAP_GRACE_S
+    sig = signal.SIGTERM
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid:
+            continue
+        if time.monotonic() > deadline:
+            for child in _children():
+                try:
+                    os.kill(child, sig)
+                except ProcessLookupError:
+                    pass
+            sig, deadline = signal.SIGKILL, time.monotonic() + 5.0
+        time.sleep(0.02)
+
+
+def _exit_on_sigterm(signum, _frame) -> None:
+    # unwinds through the finally blocks that stop Spark and reap
+    sys.exit(128 + signum)
 
 
 def _stop_spark(spark) -> None:
@@ -167,6 +255,15 @@ def main(argv: list[str] | None = None) -> int:
               file=sys.stderr)
         return 2
 
+    _become_subreaper()
+    signal.signal(signal.SIGTERM, _exit_on_sigterm)
+    try:
+        return _run(args)
+    finally:
+        _reap_children()
+
+
+def _run(args) -> int:
     cores, mem_mb = host_resources()
     work = os.path.join(ROOT, ".perfbench_work",
                         f"{args.workload}-{os.getpid()}")
@@ -185,37 +282,38 @@ def main(argv: list[str] | None = None) -> int:
 
     import pyspark
     from tildener_spark import get_spark
-    import inputs
     import workloads
 
-    # the generator processes import while the JVM starts
-    gen = inputs.Generator(cores)
-    t0 = time.perf_counter()
-    spark = get_spark(app_name=f"perfbench-{args.workload}",
-                      master=f"local[{cores}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    session_s = time.perf_counter() - t0
-    ctx = workloads.Ctx(spark, gen, work, cores, args.seed, args.seconds,
-                        bool(args.trace), max(cores, 8))
-    out = None
+    spark = out = None
+    rss = PeakRss()
+    rss.start()
     try:
-        if args.workload == "recrawl_epochs":
-            out = workloads.run_recrawl(ctx)
-        else:
-            out = workloads.run_batch(ctx, args.workload == "long_pages")
-    except Exception:
-        workloads.report_failure(args.workload)
-    finally:
-        gen.close()
-    rss = peak_rss_mb()
-    try:
-        _stop_spark(spark)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        t0 = time.perf_counter()
+        spark = get_spark(app_name=f"perfbench-{args.workload}",
+                          master=f"local[{cores}]")
+        spark.sparkContext.setLogLevel("ERROR")
+        session_s = time.perf_counter() - t0
+        ctx = workloads.Ctx(spark, work, cores, args.seed, args.seconds,
+                            bool(args.trace), cores)
         try:
-            os.rmdir(os.path.dirname(work))
-        except OSError:
-            pass
+            if args.workload == "recrawl_epochs":
+                out = workloads.run_recrawl(ctx)
+            else:
+                out = workloads.run_batch(ctx,
+                                          args.workload == "long_pages")
+        except Exception:
+            workloads.report_failure(args.workload)
+    finally:
+        rss_mb = rss.stop()
+        try:
+            if spark is not None:
+                _stop_spark(spark)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+            try:
+                os.rmdir(os.path.dirname(work))
+            except OSError:
+                pass
 
     if out is None:
         out = workloads.Outcome(0.0, [], [], 0, 0.0, 0.0,
@@ -228,7 +326,7 @@ def main(argv: list[str] | None = None) -> int:
         values["session.start_s"] = session_s
     else:
         names, units = END_TO_END, END_TO_END
-        values = _end_to_end(out, rss)
+        values = _end_to_end(out, rss_mb)
     metrics = {k: {"value": float(values[k]), "unit": units[k]}
                for k in names}
 

@@ -1,16 +1,25 @@
 """Tests for the benchmark's own code: seeded inputs, the long-page
-length mix, and the tracer's spans and wrappers.
+length mix, the tracer's spans and wrappers, and the reaping of every
+process a run starts.
 
     python3 -m pytest perfbench/tests -q
 """
 
 import importlib
+import os
+import subprocess
+import sys
+import textwrap
+import time
 
 import pytest
 
 import inputs
 import workloads
 from spans import Tracer, _resolve
+
+
+BENCH = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class FakeSc:
@@ -55,35 +64,28 @@ def test_long_page_mix_hits_targets(seed):
     assert abs(sum(tail) / len(tail) - 100) < 1
 
 
-@pytest.fixture
-def gen():
-    g = inputs.Generator(2)
-    yield g
-    g.close()
-
-
-def test_short_corpus_is_seeded(spark, gen, tmp_path):
+def test_short_corpus_is_seeded(spark, tmp_path):
     paths = [str(tmp_path / n) for n in ("a", "b", "c")]
     for path, seed in zip(paths, (3, 3, 4)):
-        inputs.write_short(gen, path, 30, seed, 2)
+        inputs.write_short(path, 30, seed, 2)
     a, b, c = (inputs.pages_of(spark.read.parquet(p)) for p in paths)
     assert _rows(a) == _rows(b)
     assert _rows(a) != _rows(c)
 
 
-def test_generator_matches_pages_df(spark, gen, tmp_path):
+def test_generator_matches_pages_df(spark, tmp_path):
     from tildener_spark.datagen import pages_df
     path = str(tmp_path / "p")
-    inputs.write_short(gen, path, 25, 6, 3)
+    inputs.write_short(path, 25, 6, 3)
     assert _rows(inputs.pages_of(spark.read.parquet(path))) \
         == _rows(pages_df(spark, 25, 6))
 
 
-def test_long_pages_join_their_constituents(spark, gen, tmp_path):
+def test_long_pages_join_their_constituents(spark, tmp_path):
     path = str(tmp_path / "long")
-    ks = inputs.write_long(gen, path, 20, 5, 2)
+    ks = inputs.write_long(path, 20, 5, 2)
     again = str(tmp_path / "again")
-    inputs.write_long(gen, again, 20, 5, 2)
+    inputs.write_long(again, 20, 5, 2)
     df = spark.read.parquet(path)
     assert _rows(inputs.pages_of(df)) == _rows(
         inputs.pages_of(spark.read.parquet(again)))
@@ -126,8 +128,7 @@ def test_tracer_nests_spans_and_always_unpatches():
 
 
 def _ctx(spark, tmp_path):
-    return workloads.Ctx(spark, inputs.Generator(2), str(tmp_path), 2, 9,
-                         0.0, True, 4)
+    return workloads.Ctx(spark, str(tmp_path), 2, 9, 0.0, True, 4)
 
 
 def _originals(targets):
@@ -166,3 +167,43 @@ def test_recrawl_trace_spans_every_target(spark, tmp_path, monkeypatch):
     _check_spans_and_unpatch(out, workloads.RECRAWL_TARGETS, before)
     assert out.layers["kgstream.epoch_bytes_written"] > 0
     assert out.layers["kgstream.compact_rebuild_s"] > 0
+
+
+def test_reap_waits_for_orphaned_grandchildren():
+    # a child that exits at once, leaving a grandchild behind: the way
+    # the JVM leaves Spark's Python worker daemon when it exits
+    script = textwrap.dedent("""
+        import subprocess, sys, time
+        sys.path.insert(0, sys.argv[1])
+        import run
+        run._become_subreaper()
+        subprocess.run(["sh", "-c", "sleep 0.5 &"], check=True)
+        t = time.monotonic()
+        run._reap_children()
+        assert time.monotonic() - t > 0.3, "returned before the orphan ended"
+        assert run._children() == []
+        print("reaped")
+    """)
+    p = subprocess.run([sys.executable, "-c", script, BENCH],
+                       capture_output=True, text=True, timeout=60)
+    assert p.returncode == 0, p.stderr
+    assert p.stdout.strip() == "reaped"
+
+
+def test_peak_rss_counts_child_processes():
+    import run
+    child = subprocess.Popen(
+        [sys.executable, "-c",
+         "import sys, time; b = b'x' * (100 << 20); print(flush=True); "
+         "time.sleep(30)"], stdout=subprocess.PIPE)
+    try:
+        child.stdout.readline()         # its 100 MB are resident
+        sampler = run.PeakRss()
+        sampler.start()
+        time.sleep(3 * run.RSS_PERIOD_S)
+        peak = sampler.stop()
+    finally:
+        child.kill()
+        child.wait()
+    own = run.tree_rss_kb()[os.getpid()] / 1024
+    assert peak > own + 90

@@ -12,7 +12,8 @@ one operation always runs).
   new urls, half re-crawls), and one ``compact(rebuild=True)`` ends it.
 
 Set-up (input generation, warm-up, the recrawl base state and the
-reference digest) is timed apart from the operations; see README.md.
+reference digest) is everything before the first timed operation; it
+is timed apart from the operations; see README.md.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from spans import Tracer, executor_totals, job_stats
 
 # -- sizes ----------------------------------------------------------------
 SHORT_PAGES = 24_000
-LONG_PAGES = 240
+LONG_PAGES = 80
 WARMUP_PAGES = 200
 RECRAWL_BASE = 900           # 90% of the recrawl corpus
 RECRAWL_EPOCHS = 1
@@ -94,7 +95,6 @@ KEEP_IO = frozenset({"linking.lsh_candidate_pairs",
 @dataclass
 class Ctx:
     spark: SparkSession
-    gen: inputs.Generator
     work: str
     cores: int
     seed: int
@@ -106,7 +106,7 @@ class Ctx:
 @dataclass
 class Outcome:
     """What one run measured; run.py turns it into metrics."""
-    setup_s: float
+    setup_s: float                   # before the first timed operation
     op_walls: list[float]            # one per operation (build/epoch)
     cycle_walls: list[float]         # one per client cycle
     pages_per_op: int
@@ -154,13 +154,10 @@ def _timed(fn, *args) -> float:
     return time.perf_counter() - t0
 
 
-def _setup_rounds(ctx: Ctx, stage) -> list[float]:
+def _setup_rounds(stage) -> list[float]:
     """Generate the inputs SETUP_ROUNDS times (round r into its own
-    directories; round 0's are used), then stop the generator pool."""
-    try:
-        return [_timed(stage, r) for r in range(SETUP_ROUNDS)]
-    finally:
-        ctx.gen.close()
+    directories; round 0's are used)."""
+    return [_timed(stage, r) for r in range(SETUP_ROUNDS)]
 
 
 def _check_prf(prf: dict, where: str) -> None:
@@ -278,19 +275,18 @@ def run_batch(ctx: Ctx, long: bool) -> Outcome:
     def stage(r: int) -> str:
         path = os.path.join(work, f"corpus{r}")
         if long:
-            inputs.write_long(ctx.gen, path, LONG_PAGES, ctx.seed,
-                              ctx.partitions)
+            inputs.write_long(path, LONG_PAGES, ctx.seed, ctx.partitions)
         else:
-            inputs.write_short(ctx.gen, path, SHORT_PAGES, ctx.seed,
-                               ctx.partitions)
+            inputs.write_short(path, SHORT_PAGES, ctx.seed, ctx.partitions)
         return path
 
     # one untimed build over a small corpus warms JVM code generation
-    # and Spark's Python worker pool, so every timed build runs warm
+    # and Spark's Python workers, so every timed build runs warm (a
+    # warm-up over the workload's own pages costs more and left the
+    # timed builds no faster or steadier)
     warm = os.path.join(work, "warm")
-    inputs.write_short(ctx.gen, warm, WARMUP_PAGES, ctx.seed + 1,
-                       ctx.partitions)
-    rounds = _setup_rounds(ctx, stage)
+    inputs.write_short(warm, WARMUP_PAGES, ctx.seed + 1, ctx.partitions)
+    rounds = _setup_rounds(stage)
     gaz = gazetteer_df(spark)
     t0 = time.perf_counter()
     _release(_batch_op(spark, inputs.pages_of(spark.read.parquet(warm)),
@@ -300,7 +296,8 @@ def run_batch(ctx: Ctx, long: bool) -> Outcome:
     pages, gold = inputs.pages_of(corpus), inputs.gold_of(corpus)
     n_pages = pages.count()
 
-    out = Outcome(statistics.median(rounds), [], [], n_pages, 0.0, 0.0)
+    out = Outcome(statistics.median(rounds) + warmup_s, [], [], n_pages,
+                  0.0, 0.0)
     out.extra.update(warmup_s=warmup_s, setup_rounds_s=rounds)
     want: list = []             # digest of the first build
 
@@ -337,17 +334,16 @@ def run_batch(ctx: Ctx, long: bool) -> Outcome:
         out.cycle_walls.append(wall)
 
     if ctx.trace and out.op_walls:
-        out.attempted += 2
+        out.attempted += 1
         try:
             out.layers, out.extra["span_names"] = _trace_batch(
                 ctx, pages, gaz, want[0])
-            # the traced build sits between two untraced ones
-            before, after = out.op_walls[-1], build()
         except Exception:
             out.failed += 1
             report_failure("traced build")
         else:
-            _finish_trace(out.layers, (before + after) / 2, warmup_s)
+            # compared with the untraced build just before it
+            _finish_trace(out.layers, out.op_walls[-1], warmup_s)
             out.layers["document.python_ms_per_page"] = \
                 _python_ms_per_page(pages)
             _finish_doc_layers(out.layers, n_pages, ctx.cores)
@@ -403,11 +399,13 @@ def run_recrawl(ctx: Ctx) -> Outcome:
     def stage(r: int) -> tuple[str, str]:
         v1 = os.path.join(work, f"v1_{r}")
         v2 = os.path.join(work, f"v2_{r}")
-        inputs.write_recrawl(ctx.gen, v1, v2, n_docs, n_recrawled,
-                             ctx.seed, ctx.partitions)
+        # half a file per core and version: an epoch unions the two
+        # versions, so it reads one partition per core
+        inputs.write_recrawl(v1, v2, n_docs, n_recrawled, ctx.seed,
+                             max(1, ctx.cores // 2))
         return v1, v2
 
-    rounds = _setup_rounds(ctx, stage)
+    rounds = _setup_rounds(stage)
     gaz = gazetteer_df(spark)
     # the reference batch doubles as the warm-up (JVM code generation,
     # Spark's Python worker pool)
@@ -417,8 +415,14 @@ def run_recrawl(ctx: Ctx) -> Outcome:
     t0 = time.perf_counter()
     ref = pipeline.run_pipeline(spark, inputs.pages_of(latest), gaz,
                                 EngineConfig())
-    want = digest(ref.canonical_triples)
-    _release(ref)
+    try:
+        want = digest(ref.canonical_triples)
+        # every cycle must reproduce these triples exactly (same
+        # digest), so their P/R against gold is the compacted state's
+        prf = triple_prf(ref.canonical_triples, inputs.gold_of(latest))
+        _check_prf(prf, "full batch over the latest versions")
+    finally:
+        _release(ref)
     warmup_s = time.perf_counter() - t0
 
     base_dir = os.path.join(work, "base")
@@ -433,8 +437,8 @@ def run_recrawl(ctx: Ctx) -> Outcome:
         again = v2.filter((num >= e * half) & (num < (e + 1) * half))
         return inputs.pages_of(new.unionByName(again))
 
-    out = Outcome(statistics.median(rounds) + base_s, [], [],
-                  RECRAWL_EPOCH_PAGES, 0.0, 0.0)
+    out = Outcome(statistics.median(rounds) + warmup_s + base_s, [], [],
+                  RECRAWL_EPOCH_PAGES, prf["precision"], prf["recall"])
     out.extra.update(warmup_s=warmup_s, setup_rounds_s=rounds,
                      base_state_s=base_s, compact_rebuild_s=[])
     def cycle() -> tuple[list[float], float]:
@@ -451,9 +455,6 @@ def run_recrawl(ctx: Ctx) -> Outcome:
         if got != want:
             raise AssertionError(
                 f"compacted state digest {got} != full batch {want}")
-        prf = triple_prf(state.canonical_triples(), inputs.gold_of(latest))
-        _check_prf(prf, "compacted state")
-        out.precision, out.recall = prf["precision"], prf["recall"]
         return walls, compact_s
 
     t_start = time.perf_counter()
@@ -470,19 +471,16 @@ def run_recrawl(ctx: Ctx) -> Outcome:
         out.extra["compact_rebuild_s"].append(compact_s)
 
     if ctx.trace and out.cycle_walls:
-        out.attempted += 2
+        out.attempted += 1
         try:
             out.layers, out.extra["span_names"] = _trace_recrawl(
                 ctx, base_dir, epoch_pages, gaz, want)
-            # the traced cycle sits between two untraced ones
-            before = out.cycle_walls[-1]
-            walls, compact_s = cycle()
         except Exception:
             out.failed += 1
             report_failure("traced cycle")
         else:
-            _finish_trace(out.layers, (before + sum(walls) + compact_s) / 2,
-                          warmup_s)
+            # compared with the untraced cycle just before it
+            _finish_trace(out.layers, out.cycle_walls[-1], warmup_s)
             out.layers["document.python_ms_per_page"] = \
                 _python_ms_per_page(epoch_pages(0))
             _finish_doc_layers(out.layers, RECRAWL_EPOCH_PAGES, ctx.cores)
