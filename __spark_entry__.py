@@ -290,20 +290,20 @@ def _pii_sql_expr(col: str) -> str:
     return expr
 
 
-def _kg_triples_sql() -> str:
+def _kg_triples_sql(base: str | None = None) -> str:
     """DuckDB mirror of triple extraction over the materialized
-    mention/token tables (operators/triples.py extract_triples:
-    lead() pairs, first-VB-between via min(v_tok) + lemma back-join).
-    Shared by kg_triples_stage (operator path) and kg_triples (fused
-    path): the two Spark implementations are independent code, so one
-    SQL string cross-checks both against each other AND against the
-    independent relational derivation."""
+    mention/token tables under ``base`` (default _KG_CACHE): lead()
+    pairs, first-VB-between via min(v_tok) + lemma back-join.  A
+    relational derivation independent of the fused per-document pass
+    (operators/document.py doc_triples_py), which it gates in the
+    kg_triples row and in tests/test_properties.py."""
+    base = base or _KG_CACHE
     return f"""
             with m as (
                 select url, sent_id, surface, ne_type, begin_tok,
                        end_tok, avg_prob
                 from read_parquet(
-                    '{_KG_CACHE}/mentions.parquet/*.parquet')
+                    '{base}/mentions.parquet/*.parquet')
             ),
             pairs as (
                 select url, sent_id,
@@ -321,7 +321,7 @@ def _kg_triples_sql() -> str:
             verbs as (
                 select url, sent_id, tok_id as v_tok, lemma as v_lemma
                 from read_parquet(
-                    '{_KG_CACHE}/tagged_tokens.parquet/*.parquet')
+                    '{base}/tagged_tokens.parquet/*.parquet')
                 where pos = 'VB'
             ),
             agg as (
@@ -351,19 +351,22 @@ def _kg_triples_sql() -> str:
         """
 
 
-def _kg_links_sql() -> str:
+def _kg_links_sql(base: str | None = None) -> str:
     """DuckDB mirror of within-document alias resolution over the
-    materialized mention table (operators/linking.py alias_links:
-    shared-token blocking, containment-first 0.95, JW typo arm,
-    nearest-preceding tie-break, per-alias majority).  Shared by
-    kg_links_stage (operator path) and kg_links (fused path
-    doc_links_py) — see _kg_triples_sql on why sharing is the point,
-    and _JW_SRC on the Jaro-Winkler byte/codepoint equivalence."""
+    materialized mention and initialism tables under ``base`` (default
+    _KG_CACHE): shared-token blocking, containment-first 0.95, JW typo
+    arm, nearest-preceding tie-break, per-alias majority.  It gates the
+    fused pass's doc_links_py (operators/document.py) in the kg_links
+    row and in tests/test_properties.py.  The JW arm is unreachable:
+    single-token sets that share a token are equal, so containment
+    scores first (doc_links_py drops the arm; this reference keeps it).
+    See _JW_SRC on the Jaro-Winkler byte/codepoint equivalence."""
+    base = base or _KG_CACHE
     return f"""
             with init_list as (
                 select coalesce(list(surface), []) as inits
                 from read_parquet(
-                    '{_KG_CACHE}/gaz_existing.parquet/*.parquet')
+                    '{base}/gaz_existing.parquet/*.parquet')
             ),
             m as (
                 select url, ne_type, surface, begin_tok,
@@ -371,7 +374,7 @@ def _kg_links_sql() -> str:
                            string_split(surface, ' '),
                            t -> not list_contains(inits, t))) as toks
                 from read_parquet(
-                    '{_KG_CACHE}/mentions.parquet/*.parquet'),
+                    '{base}/mentions.parquet/*.parquet'),
                      init_list
             ),
             m2 as (select * from m where len(toks) > 0),
@@ -436,19 +439,22 @@ def _kg_links_sql() -> str:
         """
 
 
-def _kg_graph_sql(cross: bool, base: str | None = None) -> str:
+def _kg_graph_sql(base: str | None = None) -> str:
     """DuckDB mirror of the graph canonicalization stage
-    (operators/graph.py build_entity_graph join path +
-    operators/components.py) over the materialized mention/link
-    tables: doc-canonical resolution, star contraction to hub nodes,
-    alias-chain hub pairs, connected components as a recursive-CTE
-    transitive closure with min-label, per-component representative,
-    entity rollup.  Multiply-referenced CTEs carry MATERIALIZED
-    so DuckDB computes each once instead of re-inlining the
-    upstream chain per reference (same fix as the q29 oracle).
+    (operators/graph.py build_entity_graph + operators/components.py)
+    over the materialized mention/link tables under ``base`` (default
+    _KG_CACHE).  Where the Spark stage reads the fused pass's per-doc
+    surfaces/hub_pairs and rewrites through a broadcast correction
+    table, this mirror re-derives everything by joins: doc-canonical
+    resolution, star contraction to hub nodes, alias-chain hub pairs,
+    connected components as a recursive-CTE transitive closure with
+    min-label, per-component representative, entity rollup.
+    Multiply-referenced CTEs carry MATERIALIZED so DuckDB computes
+    each once instead of re-inlining the upstream chain per reference
+    (same fix as the q29 oracle).
 
-    ``cross=True`` additionally mirrors the default-ON cross-document
-    LSH linking (graph.py:150-190): vocabulary of doc-canonical
+    It also mirrors the cross-document LSH linking
+    (graph.py build_entity_graph): vocabulary of doc-canonical
     surfaces (len >= cross_doc_min_len=8), the PRODUCTION minhash
     banding CTE, per-(type, band) bucket cap 50
     (linking.lsh_candidate_pairs), banded self-join, the
@@ -458,8 +464,42 @@ def _kg_graph_sql(cross: bool, base: str | None = None) -> str:
     above 0.94 — see _JW_SRC note)."""
     from tildener_spark.operators.graph import _ACCENTS, _ACCENTS_FOLDED
     base = base or _KG_CACHE
-    pairs_rel = "all_pairs" if cross else "hub_pairs"
-    cross_ctes = f"""
+    return f"""
+            with recursive links as materialized (
+                select url, ne_type, alias, canonical
+                from read_parquet(
+                    '{base}/links.parquet/*.parquet')
+            ),
+            groups as (
+                select distinct url, ne_type, surface
+                from read_parquet(
+                    '{base}/mentions.parquet/*.parquet')
+            ),
+            resolved as materialized (
+                select g.url, g.ne_type, g.surface,
+                       coalesce(l.canonical, g.surface) as doc_canonical
+                from groups g
+                left join links l
+                  on g.url = l.url and g.ne_type = l.ne_type
+                 and g.surface = l.alias
+            ),
+            mention_hub as materialized (
+                select url, ne_type, surface,
+                       'g:' || ne_type || '␟' || doc_canonical
+                           as hub
+                from resolved
+            ),
+            hub_pairs as materialized (
+                select distinct ha.hub as src, hc.hub as dst
+                from links l
+                join mention_hub ha
+                  on l.url = ha.url and l.ne_type = ha.ne_type
+                 and l.alias = ha.surface
+                join mention_hub hc
+                  on l.url = hc.url and l.ne_type = hc.ne_type
+                 and l.canonical = hc.surface
+                where ha.hub <> hc.hub
+            ),
             vocab as (
                 select distinct ne_type, doc_canonical as surface
                 from resolved
@@ -511,47 +551,11 @@ def _kg_graph_sql(cross: bool, base: str | None = None) -> str:
                 select 'g:' || ne_type || '␟' || a,
                        'g:' || ne_type || '␟' || b
                 from cross_scored
-            ),""" if cross else ""
-    return f"""
-            with recursive links as materialized (
-                select url, ne_type, alias, canonical
-                from read_parquet(
-                    '{base}/links.parquet/*.parquet')
             ),
-            groups as (
-                select distinct url, ne_type, surface
-                from read_parquet(
-                    '{base}/mentions.parquet/*.parquet')
-            ),
-            resolved as materialized (
-                select g.url, g.ne_type, g.surface,
-                       coalesce(l.canonical, g.surface) as doc_canonical
-                from groups g
-                left join links l
-                  on g.url = l.url and g.ne_type = l.ne_type
-                 and g.surface = l.alias
-            ),
-            mention_hub as materialized (
-                select url, ne_type, surface,
-                       'g:' || ne_type || '␟' || doc_canonical
-                           as hub
-                from resolved
-            ),
-            hub_pairs as materialized (
-                select distinct ha.hub as src, hc.hub as dst
-                from links l
-                join mention_hub ha
-                  on l.url = ha.url and l.ne_type = ha.ne_type
-                 and l.alias = ha.surface
-                join mention_hub hc
-                  on l.url = hc.url and l.ne_type = hc.ne_type
-                 and l.canonical = hc.surface
-                where ha.hub <> hc.hub
-            ),{cross_ctes}
             edges as materialized (
-                select src as a, dst as b from {pairs_rel}
+                select src as a, dst as b from all_pairs
                 union
-                select dst, src from {pairs_rel}
+                select dst, src from all_pairs
             ),
             reach(a, b) as (
                 select a, b from edges
@@ -857,7 +861,7 @@ def _ngram_rep_sql() -> str:
 def _entity_edges_cte() -> str:
     """DuckDB mirror of graphstats.entity_edges over the materialized
     canonical triples (whose own derivation is oracled end-to-end by
-    kg_triples / kg_graph_stage): evidence-weighted edge list keyed by
+    kg_triples / kg_entities): evidence-weighted edge list keyed by
     the same ``type SEP canonical`` node ids."""
     return f"""
         ct as (
@@ -4113,7 +4117,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _KG_MEMO[key]
 
     def kg_mentions(spark, sf):
-        # FUSED-path BIO span assembly (document.py doc_mentions_py)
+        # fused-pass BIO span assembly (document.py doc_mentions_py)
         # checked against an independent gaps-and-islands SQL over the
         # materialized tagged tokens (the tagging is shared input; the
         # assembly semantics — spans start at B only, maximal same-type
@@ -4126,7 +4130,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "ne_type", F.round("avg_prob", 6).alias("avg_prob"))
 
     def kg_triples(spark, sf):
-        # FUSED-path triples (document.py doc_triples_py) checked
+        # fused-pass triples (document.py doc_triples_py) checked
         # against _kg_triples_sql() over the materialized mention/
         # token tables — the materialization runs first so the oracle
         # parquet exists and is current (same deterministic pipeline)
@@ -4138,7 +4142,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.round("prob", 6).alias("prob"), "kind")
 
     def kg_links(spark, sf):
-        # FUSED-path links (document.py doc_links_py) vs
+        # fused-pass links (document.py doc_links_py) vs
         # _kg_links_sql() — see kg_triples
         _kg_materialized(spark)
         res, *_ = _kg(spark)
@@ -4147,9 +4151,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.round("score", 6).alias("score"))
 
     def kg_entities(spark, sf):
-        # FUSED-path graph stage (Arrow-pass surfaces/hub_pairs +
-        # broadcast-correction canonicalization) vs
-        # _kg_graph_sql(cross=True) — see kg_triples
+        # graph stage (Arrow-pass surfaces/hub_pairs + cross-doc
+        # LSH + broadcast-correction canonicalization) vs
+        # _kg_graph_sql() — see kg_triples
         _kg_materialized(spark)
         res, *_ = _kg(spark)
         return res.entities.select(
@@ -4164,7 +4168,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # replays identically on any engine/partitioning; the oracle
         # unrolls the 5 iterations as CTEs over the materialized
         # canonical triples (whose derivation kg_triples /
-        # kg_graph_stage oracle end-to-end)
+        # kg_entities oracle end-to-end)
         from tildener_spark.operators.graphstats import (
             entity_edges, entity_pagerank)
         m = _kg_materialized(spark)
@@ -4544,78 +4548,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         m = _kg_materialized(spark)
         return gazetteer_candidates(m["mentions"], m["gaz_existing"])
 
-    def kg_triples_stage(spark, sf):
-        # triple extraction as a relational transform of the
-        # materialized classifier output (operators/triples.py
-        # extract_triples: consecutive same-sentence mention pairs via
-        # lead(), first VB-lemma strictly between the pair, else
-        # co_occurs).  The fused kg_triples row stays rows-only (it
-        # embeds the classifier); THIS row gives the extraction
-        # semantics themselves an exact DuckDB mirror (r2 verdict #2
-        # pattern, extended downstream).
-        from tildener_spark.operators.triples import extract_triples
-        m = _kg_materialized(spark)
-        return extract_triples(m["mentions"], m["tagged_tokens"]).select(
-            "url", "sent_id", "subj", "subj_type", "pred",
-            "obj", "obj_type",
-            F.round("prob", 6).alias("prob"), "kind")
-
-    def kg_links_stage(spark, sf):
-        # within-document alias resolution over the same materialized
-        # mentions (operators/linking.py alias_links: containment-first
-        # 0.95, Jaro-Winkler >= typo_min_score for single-token typo
-        # variants, nearest-preceding tie-break, per-alias majority).
-        # The oracle mirrors Jaro-Winkler via DuckDB's byte-level
-        # jaro_winkler_similarity over an injective diacritic->ASCII
-        # translate (byte==codepoint then), exact because accepted
-        # scores >= 0.93 imply jaro > 0.883 > 0.7 where DuckDB's
-        # boost-threshold variant coincides with ours.
-        from tildener_spark.config import EngineConfig
-        from tildener_spark.operators.linking import alias_links
-        m = _kg_materialized(spark)
-        inits = frozenset(
-            r["surface"] for r in m["gaz_existing"].collect())
-        return alias_links(m["mentions"], EngineConfig(), inits).select(
-            "url", "ne_type", "alias", "canonical",
-            F.round("score", 6).alias("score"))
-
-    def kg_graph_stage(spark, sf):
-        # graph canonicalization given materialized mentions + links:
-        # doc-canonical resolution, star contraction, connected
-        # components over the hub graph, per-component representative
-        # and entity rollup (operators/graph.py build_entity_graph,
-        # join path; operators/components.py).  Cross-doc LSH is OFF
-        # here so the oracle is a pure recursive-CTE transitive
-        # closure with min-label — the LSH banding math has its own
-        # exact row (q13c).
-        from tildener_spark.config import EngineConfig
-        from tildener_spark.operators.graph import build_entity_graph
-        m = _kg_materialized(spark)
-        g = build_entity_graph(
-            m["mentions"], EngineConfig(cross_doc_linking=False),
-            links=m["links"])
-        return g["entities"].select(
-            "component", "ne_type", "canonical",
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("n_surfaces").cast("long").alias("n_surfaces"))
-
-    def kg_entities_stage(spark, sf):
-        # the same graph stage through the DEFAULT config — the
-        # north-star cross-document minhash-LSH + Jaro-Winkler merging
-        # is ON, so this row gives the production vocab->banding->
-        # bucket-cap->prefilter->JW->CC chain an exact end-to-end
-        # DuckDB mirror (_kg_graph_sql(cross=True)); the fused
-        # kg_entities row stays rows-only (it embeds the classifier).
-        from tildener_spark.config import EngineConfig
-        from tildener_spark.operators.graph import build_entity_graph
-        m = _kg_materialized(spark)
-        g = build_entity_graph(
-            m["mentions"], EngineConfig(), links=m["links"])
-        return g["entities"].select(
-            "component", "ne_type", "canonical",
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("n_surfaces").cast("long").alias("n_surfaces"))
-
     def kg_incremental(spark, sf):
         # incremental KG maintenance == full batch, cross-engine: a
         # prior CHECKPOINTED run over pages 0-89 is merged with the
@@ -4624,7 +4556,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # star edges, broadcast-correction rewrite of stored
         # triples_dc), and the merged entity table must hash against
         # the SAME full-corpus relational derivation that oracles
-        # kg_entities_stage (_kg_graph_sql(cross=True)).  Hash-green
+        # kg_entities (_kg_graph_sql()).  Hash-green
         # therefore proves merge-vs-batch bit-identity, not just
         # plausibility.
         import shutil
@@ -4809,10 +4741,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_span_eval": kg_token_eval,
         "kg_top_sentences": kg_top_sentences,
         "kg_gazetteer_candidates": kg_gazetteer_candidates,
-        "kg_triples_stage": kg_triples_stage,
-        "kg_links_stage": kg_links_stage,
-        "kg_graph_stage": kg_graph_stage,
-        "kg_entities_stage": kg_entities_stage,
         "kg_incremental": kg_incremental,
         "kg_recrawl": kg_recrawl,
         "kg_bootstrap": kg_bootstrap,
@@ -7715,50 +7643,30 @@ def oracle_sql() -> dict[str, str]:
                     '{_KG_CACHE}/gaz_existing.parquet/*.parquet')
             ) e on c.ne_type = e.ne_type and c.surface = e.surface
         """,
-        # extract_triples (operators/triples.py): lead() pairs +
-        # first-VB-between via min(v_tok) then a lemma back-join
-        # (unambiguous mirror of Spark's null-skipping min_by)
-        "kg_triples_stage": _kg_triples_sql(),
-        # the FUSED triple extraction (operators/document.py
-        # doc_triples_py) against the same independent SQL: converts
-        # the fused-vs-operator pytest parity into a driver-visible
-        # correctness row (upstream classifier output is shared via
-        # the materialized cache; the pairing/verb logic is what this
-        # row cross-checks)
+        # the fused triple extraction (operators/document.py
+        # doc_triples_py) against an independent relational derivation
+        # (lead() pairs + first-VB-between via min(v_tok) then a lemma
+        # back-join); upstream classifier output is shared via the
+        # materialized cache, the pairing/verb logic is what this row
+        # cross-checks
         "kg_triples": _kg_triples_sql(),
-        # alias_links (operators/linking.py): shared-token blocking,
-        # containment-first 0.95, JW typo arm (see _JW_SRC note),
+        # the fused within-doc linking (document.py doc_links_py):
+        # shared-token blocking, containment-first 0.95,
         # nearest-preceding best per occurrence, per-alias majority
-        "kg_links_stage": _kg_links_sql(),
-        # the FUSED within-doc linking (document.py doc_links_py /
-        # _links_for_type) against the same SQL — see kg_triples
         "kg_links": _kg_links_sql(),
-        # build_entity_graph join path + connected_components
-        # (operators/graph.py, components.py): doc-canonical resolve,
-        # alias-chain hub pairs, CC = min reachable node id via
-        # recursive transitive closure, per-component rep, entity
-        # rollup.  UTF-8 byte order == codepoint order, so min() on
-        # node ids agrees across Spark / Python union-find / DuckDB.
-        "kg_graph_stage": _kg_graph_sql(cross=False),
-        # the same through the DEFAULT config: the north-star
-        # cross-document LSH stage is ON, mirrored end-to-end (vocab
-        # -> production minhash banding CTE -> bucket-cap 50 ->
-        # banded self-join -> length/folded-first-char prefilters ->
-        # Jaro-Winkler >= 0.94 -> extra hub-hub edges -> CC)
-        "kg_entities_stage": _kg_graph_sql(cross=True),
-        # incremental merge vs the SAME full-batch derivation: the
-        # oracle is deliberately identical to kg_entities_stage's —
-        # hash-green == merge/batch bit-identity proven in DuckDB
-        "kg_incremental": _kg_graph_sql(cross=True),
+        # incremental merge vs the full-batch derivation: the oracle
+        # is deliberately identical to kg_entities' — hash-green ==
+        # merge/batch bit-identity proven in DuckDB
+        "kg_incremental": _kg_graph_sql(),
         "kg_recrawl": _kg_graph_sql(
-            cross=True,
             base=os.path.join(_KG_CACHE, "recrawl")),
-        # the FUSED graph fast path (per-document surfaces/hub_pairs
-        # from the Arrow pass + broadcast-correction canonicalization,
-        # graph.py:200-251) against the same recursive-CTE mirror —
-        # a DIFFERENT algorithm than the join path kg_graph_stage
-        # checks, so both canonicalization strategies are value-gated
-        "kg_entities": _kg_graph_sql(cross=True),
+        # the fused graph stage (per-document surfaces/hub_pairs from
+        # the Arrow pass + cross-doc LSH -> Jaro-Winkler >= 0.94 ->
+        # CC -> broadcast-correction canonicalization) against the
+        # join-based recursive-CTE mirror.  UTF-8 byte order ==
+        # codepoint order, so min() on node ids agrees across Spark /
+        # Python union-find / DuckDB.
+        "kg_entities": _kg_graph_sql(),
         "kg_pagerank": _kg_pagerank_sql(),
         # personalized pagerank: seed-restricted unrolled fixpoint
         "kg_ppr": _kg_ppr_sql(),

@@ -1,27 +1,31 @@
 """Cross-document surface merging (minhash-LSH blocking + JW scoring
 -> hub-hub edges -> CC), the north-star linking stage."""
 
-import pyspark.sql.functions as F
-
 from tildener_spark.config import EngineConfig
 from tildener_spark.operators.graph import build_entity_graph
 from tildener_spark.operators.linking import jaro_winkler_py
 
 
-def _mentions(spark):
+def _graph_inputs(spark):
+    """Per-document surfaces and hub pairs as the fused pass emits
+    them: no within-doc aliases, so every surface is its own
+    doc-canonical and no alias chain yields a hub pair."""
     rows = [
         # same entity, diacritic/typo variants across documents
-        ("u1", "PERS", "Janis Berzins", 0),
-        ("u2", "PERS", "Janis Berzinsh", 0),
+        ("u1", "PERS", "Janis Berzins", "Janis Berzins"),
+        ("u2", "PERS", "Janis Berzinsh", "Janis Berzinsh"),
         # distinct people that must NOT merge
-        ("u1", "PERS", "Anna Kalnina", 5),
-        ("u3", "PERS", "Ilze Liepa", 0),
+        ("u1", "PERS", "Anna Kalnina", "Anna Kalnina"),
+        ("u3", "PERS", "Ilze Liepa", "Ilze Liepa"),
         # orgs: exact surface merges via hubs regardless of LSH
-        ("u1", "ORG", "SIA Grauds", 9),
-        ("u2", "ORG", "SIA Grauds", 9),
+        ("u1", "ORG", "SIA Grauds", "SIA Grauds"),
+        ("u2", "ORG", "SIA Grauds", "SIA Grauds"),
     ]
-    return spark.createDataFrame(
-        rows, "url string, ne_type string, surface string, begin_tok int")
+    surfaces = spark.createDataFrame(
+        rows, "url string, ne_type string, surface string,"
+              " doc_canonical string")
+    hub_pairs = spark.createDataFrame([], "src string, dst string")
+    return surfaces, hub_pairs
 
 
 def test_thresholds_are_sane():
@@ -33,8 +37,7 @@ def test_thresholds_are_sane():
 
 
 def test_cross_doc_merges_typo_variants(spark):
-    cfg = EngineConfig(cross_doc_linking=True)
-    g = build_entity_graph(_mentions(spark), cfg)
+    g = build_entity_graph(*_graph_inputs(spark), EngineConfig())
     ents = {r["canonical"]: r for r in g["entities"].collect()}
     # the two Janis variants collapse into ONE entity spanning 2 docs
     janis = [c for c in ents if c.startswith("Janis")]
@@ -45,10 +48,3 @@ def test_cross_doc_merges_typo_variants(spark):
     assert "Anna Kalnina" in ents and "Ilze Liepa" in ents
     # exact-surface org merged by hubs
     assert ents["SIA Grauds"]["n_docs"] == 2
-
-
-def test_cross_doc_can_be_disabled(spark):
-    cfg = EngineConfig(cross_doc_linking=False)
-    g = build_entity_graph(_mentions(spark), cfg)
-    canons = {r["canonical"] for r in g["entities"].collect()}
-    assert "Janis Berzins" in canons and "Janis Berzinsh" in canons

@@ -36,7 +36,7 @@ def test_entry_flagship(spark):
 
 
 def test_jw_translate_alphabet_guard():
-    """The kg_links_stage oracle maps diacritics to unused ASCII so
+    """The kg_links / kg_entities oracles map diacritics to unused ASCII so
     DuckDB's byte-level jaro_winkler_similarity computes over exactly
     our codepoints.  Guard the two assumptions: the map is injective,
     and the datagen corpus alphabet never grows a lowercase non-ASCII
@@ -55,12 +55,31 @@ def test_jw_translate_alphabet_guard():
 
 
 def test_cross_doc_stage_exercised(spark):
-    """kg_entities_stage must MERGE entities relative to
-    kg_graph_stage (cross-doc linking off): if this ever stops
-    holding, the datagen corpus no longer contains a >=8-char
-    typo/diacritic surface pair above the 0.94 JW bar and the
-    cross-doc arm of the oracle mirror has gone vacuously green."""
-    q = entry_mod.queries()
-    n_off = q["kg_graph_stage"](spark, SF_SMOKE).count()
-    n_on = q["kg_entities_stage"](spark, SF_SMOKE).count()
-    assert n_on < n_off
+    """The kg_entities oracle mirrors the cross-document LSH arm.  On
+    the registry's 120-page KG corpus that arm must accept at least
+    one pair over the vocabulary the graph stage builds: if this ever
+    stops holding, the datagen corpus no longer contains a >=8-char
+    typo/diacritic surface pair above the 0.94 JW bar and the arm has
+    gone vacuously green."""
+    import pyspark.sql.functions as F
+
+    from tildener_spark.datagen import corpus_df, gazetteer_df, split_gold
+    from tildener_spark.operators.document import (
+        explode_docs, make_process_document_udf)
+    from tildener_spark.operators.graph import (
+        cross_doc_vocab, lsh_candidate_pairs, score_cross_pairs)
+
+    pages, *_ = split_gold(corpus_df(spark, 120))
+    gaz = [(r["ne_type"], r["surface"])
+           for r in gazetteer_df(spark).collect()]
+    inits = {s for t, s in gaz if t == "ORG_INIT"}
+    doc_udf = make_process_document_udf(
+        gaz, initialisms=inits, emit_tokens=False, emit_mentions=False)
+    docs = pages.select("url", doc_udf(F.col("text")).alias("doc"))
+    vocab = cross_doc_vocab(explode_docs(docs, "surfaces"))
+    handles: list = []
+    accepted = score_cross_pairs(
+        lsh_candidate_pairs(vocab, handles=handles)).count()
+    for h in handles:
+        h.unpersist()
+    assert accepted >= 1

@@ -1,16 +1,25 @@
-"""Entity linking: containment rule, initialism handling, JW scores."""
+"""Entity linking: within-document containment rule (doc_links_py),
+initialism handling, JW scores, minhash-LSH blocking."""
 
 import pytest
 
 from tildener_spark.config import EngineConfig
+from tildener_spark.operators.document import Mention, doc_links_py
 from tildener_spark.operators.linking import (
-    alias_links, jaro_winkler_py, lsh_candidate_pairs, with_minhash_bands)
+    jaro_winkler_py, lsh_candidate_pairs, with_minhash_bands)
 
 
-def _mentions(spark, rows):
-    return spark.createDataFrame(rows, (
-        "url string, ne_type string, surface string, begin_tok int,"
-        "avg_prob double"))
+def _mention(ne_type, surface, begin_tok):
+    return Mention(0, 0, begin_tok, begin_tok, 0, 0, 0, 0, surface,
+                   surface, ne_type, 0.97, len(surface.split(" ")))
+
+
+def _links(rows, initialisms=frozenset()):
+    """doc_links_py over one document's (ne_type, surface, begin_tok)
+    mentions -> [(alias, canonical)]."""
+    out = doc_links_py([_mention(*r) for r in rows],
+                       frozenset(initialisms))
+    return [(alias, canonical) for _t, alias, canonical, _s in out]
 
 
 def test_jaro_winkler_values():
@@ -20,61 +29,56 @@ def test_jaro_winkler_values():
     assert jaro_winkler_py("dwayne", "duane") == pytest.approx(0.84, abs=1e-2)
 
 
-def test_alias_links_containment(spark):
-    m = _mentions(spark, [
-        ("u", "PERS", "Jānis Bērziņš", 0, 0.97),
-        ("u", "PERS", "Bērziņš", 10, 0.97),
-    ])
-    out = alias_links(m).collect()
-    assert len(out) == 1
-    assert (out[0]["alias"], out[0]["canonical"]) == (
-        "Bērziņš", "Jānis Bērziņš")
+def test_alias_containment():
+    assert _links([
+        ("PERS", "Jānis Bērziņš", 0),
+        ("PERS", "Bērziņš", 10),
+    ]) == [("Bērziņš", "Jānis Bērziņš")]
 
 
-def test_alias_prefers_nearest_preceding(spark):
-    m = _mentions(spark, [
-        ("u", "PERS", "Jānis Bērziņš", 0, 0.97),
-        ("u", "PERS", "Pēteris Bērziņš", 5, 0.97),
-        ("u", "PERS", "Bērziņš", 10, 0.97),
-    ])
-    out = alias_links(m).collect()
-    assert len(out) == 1
-    assert out[0]["canonical"] == "Pēteris Bērziņš"
+def test_alias_prefers_nearest_preceding():
+    assert _links([
+        ("PERS", "Jānis Bērziņš", 0),
+        ("PERS", "Pēteris Bērziņš", 5),
+        ("PERS", "Bērziņš", 10),
+    ]) == [("Bērziņš", "Pēteris Bērziņš")]
 
 
-def test_full_names_sharing_first_name_do_not_link(spark):
-    m = _mentions(spark, [
-        ("u", "PERS", "Elīna Rozīte", 0, 0.97),
-        ("u", "PERS", "Elīna Balodis", 5, 0.97),
-    ])
-    assert alias_links(m).collect() == []
+def test_full_names_sharing_first_name_do_not_link():
+    assert _links([
+        ("PERS", "Elīna Rozīte", 0),
+        ("PERS", "Elīna Balodis", 5),
+    ]) == []
 
 
-def test_initialisms_excluded_from_blocking(spark):
-    m = _mentions(spark, [
-        ("u", "ORG", "SIA Grauds", 0, 0.9),
-        ("u", "ORG", "SIA Baltijas Banka", 5, 0.9),
-    ])
-    assert alias_links(m, initialisms={"SIA", "AS"}).collect() == []
+def test_initialisms_excluded_from_blocking():
+    assert _links([
+        ("ORG", "SIA Grauds", 0),
+        ("ORG", "SIA Baltijas Banka", 5),
+    ], {"SIA", "AS"}) == []
 
 
-def test_initialism_variant_links(spark):
-    m = _mentions(spark, [
-        ("u", "ORG", "SIA Baltijas Banka", 0, 0.9),
-        ("u", "ORG", "Baltijas Banka", 5, 0.9),
-    ])
-    out = alias_links(m, initialisms={"SIA", "AS"}).collect()
-    assert len(out) == 1
-    assert (out[0]["alias"], out[0]["canonical"]) == (
-        "Baltijas Banka", "SIA Baltijas Banka")
+def test_initialism_variant_links():
+    assert _links([
+        ("ORG", "SIA Baltijas Banka", 0),
+        ("ORG", "Baltijas Banka", 5),
+    ], {"SIA", "AS"}) == [("Baltijas Banka", "SIA Baltijas Banka")]
 
 
-def test_no_cross_document_links(spark):
-    m = _mentions(spark, [
-        ("u1", "PERS", "Jānis Bērziņš", 0, 0.97),
-        ("u2", "PERS", "Bērziņš", 10, 0.97),
-    ])
-    assert alias_links(m).collect() == []
+def test_no_cross_document_links():
+    # linking runs per document: each page sees only its own mentions
+    assert _links([("PERS", "Jānis Bērziņš", 0)]) == []
+    assert _links([("PERS", "Bērziņš", 10)]) == []
+
+
+def test_single_token_typo_variants_do_not_link():
+    # one-token surfaces that differ are disjoint token sets, so
+    # neither contains the other: no within-document link (the
+    # cross-document stage is what merges typo variants)
+    assert _links([
+        ("PERS", "Bērziņš", 0),
+        ("PERS", "Berziņš", 5),
+    ]) == []
 
 
 def test_minhash_lsh_finds_near_duplicates(spark):

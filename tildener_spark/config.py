@@ -59,16 +59,13 @@ class EngineConfig:
     minhash_rows: int = 4
     minhash_bands: int = 8             # 32 hashes total
     shingle_size: int = 3
-    typo_min_score: float = 0.93       # JW bar for 1-token alias variants
-    # Cross-document surface merging: minhash-LSH blocking over the
-    # global (type, doc-canonical surface) vocabulary + Jaro-Winkler
-    # scoring; accepted pairs become hub-hub edges for CC.  High bar:
-    # merges typo/diacritic variants, not merely similar names.
-    # Default ON (the north-star stage): banding is an Arrow-batched
-    # numpy UDF and scoring a numpy-vectorized Jaro-Winkler, so the
-    # stage costs a small fraction of the pipeline (BENCH/BASELINE.md;
-    # round 1's interpreted variant was the reason this was opt-in).
-    cross_doc_linking: bool = True
+    # Cross-document surface merging (always on): minhash-LSH blocking
+    # over the global (type, doc-canonical surface) vocabulary +
+    # Jaro-Winkler scoring; accepted pairs become hub-hub edges for CC.
+    # High bar: merges typo/diacritic variants, not merely similar
+    # names.  Banding is an Arrow-batched numpy UDF and scoring a
+    # numpy-vectorized Jaro-Winkler, so the stage costs a small
+    # fraction of the pipeline (BENCH/BASELINE.md).
     cross_doc_min_score: float = 0.94
     # surfaces shorter than this skip LSH (few shingles -> minhash
     # collides on everything; exact-surface hub merging covers them)

@@ -310,10 +310,17 @@ def make_tag_pages_udf(gazetteer_rows, cfg=None):
     refine_document) each cost a JVM->Python->JVM transfer of the full
     nested token arrays; chaining all three triples the serialization
     volume, which is the dominant cost of the tagging stage (measured:
-    ~3x tagging wall time at 200k docs).  The production pipeline uses
-    this fused form; the modular forms remain for tests and ad-hoc
-    composition.  Semantics are identical by construction — all three
-    stages are pure functions over one document.
+    ~3x tagging wall time at 200k docs).  The modular forms remain for
+    tests and ad-hoc composition.  Semantics are identical by
+    construction — all three stages are pure functions over one
+    document.
+
+    Why this stays next to the fused per-document pass
+    (operators/document.py, which the pipeline runs): it is a thin
+    tokens-only wrapper over the same tokenize_table / classify_table /
+    refine_table calls, for callers that want only the tagged tokens —
+    the bootstrap registry row and its tests, the refinement ablation
+    and the span-assembly parity test.
     """
     from tildener_spark.config import EngineConfig
     from tildener_spark.operators.refine import refine_table

@@ -5,18 +5,20 @@ within-document alias links.
 Why this exists (the 100 TB argument): every stage between raw text
 and the cross-document graph is *document-local* — span assembly
 (NERefinements.pm:219-286), triple extraction (sentence windows), and
-alias linking (same-url blocking only).  Expressing them as DataFrame
-window/join/groupBy ops (operators/spans.py, triples.py, linking.py —
-kept as the DuckDB-oracle parity path) shuffles the full token table
-three times; at 10^12 documents those shuffles dominate the job.  The
-fused pass computes all four outputs while the document is already in
+alias linking (same-url blocking only).  Expressed as DataFrame
+window/join/groupBy ops they would shuffle the full token table three
+times; at 10^12 documents those shuffles dominate the job.  The fused
+pass computes all outputs while the document is already in
 Python-worker memory, so the pipeline's only shuffles are over the
 small cross-document tables (hub edges, components, canonical-triple
 aggregation).
 
-Semantics are the *same by construction* as the DataFrame operators;
-tests/test_document.py asserts row-level equality of both paths on the
-synthetic corpus.
+This is the one Spark implementation of these stages.  The
+independent checks are the DuckDB SQL mirrors in __spark_entry__.py
+(``kg_mentions``, ``_kg_triples_sql``, ``_kg_links_sql``), which
+re-derive mentions, triples and links from the tagged tokens;
+tests/test_properties.py runs them against this pass on adversarial
+documents.
 """
 
 from __future__ import annotations
@@ -31,13 +33,12 @@ from tildener_spark.config import EngineConfig
 from tildener_spark.operators.classify import (
     build_gazetteer_index, classify_table,
 )
-from tildener_spark.operators.linking import jaro_winkler_py
 from tildener_spark.operators.refine import refine_table
 from tildener_spark.operators.tokenize import (
     TAGGED_TYPE, TokenTable, batch_token_spans, tokenize_table,
 )
 
-# Field types match the DataFrame operators' output exactly (span_id
+# Field types match operators/spans.assemble_spans exactly (span_id
 # and n_tokens are longs because window-sum / count() return longs).
 MENTION_STRUCT = T.StructType([
     T.StructField("span_id", T.LongType()),
@@ -192,11 +193,12 @@ def doc_mentions_py(tt: TokenTable) -> list[Mention]:
 
 def doc_triples_py(mentions: list[Mention], tt: TokenTable,
                    link_map: dict | None = None) -> list[tuple]:
-    """Consecutive-mention-pair triples, identical to
-    operators/triples.extract_triples (sentence window + first verb
-    strictly between the pair).  ``link_map`` ((ne_type, alias) ->
-    canonical) annotates each end with its within-doc canonical.
-    Rows are tuples in TRIPLE_STRUCT field order."""
+    """Consecutive-mention-pair triples within a sentence: pred is the
+    lemma of the first verb strictly between the pair, else
+    'co_occurs'; prob is the smaller mention probability.
+    ``link_map`` ((ne_type, alias) -> canonical) annotates each end
+    with its within-doc canonical.  Rows are tuples in TRIPLE_STRUCT
+    field order."""
     link_map = link_map or {}
     # verbs bucketed per sentence, in token order (enumerate order):
     # the pair loop below only ever probes its own sentence's verbs,
@@ -239,81 +241,70 @@ def doc_triples_py(mentions: list[Mention], tt: TokenTable,
 
 # --------------------------------------------------------------- links
 
-def _links_for_type(a_type: str, occs: list[tuple], cfg: EngineConfig,
+def _links_for_type(a_type: str, occs: list[tuple],
                     best_rows: list[tuple]) -> None:
-    """Best canonical per alias occurrence within one ne_type bucket.
+    """Best canonical per alias occurrence within one ne_type bucket,
+    appended to ``best_rows`` as (ne_type, alias, canonical).
 
-    Same pair predicate / scoring / tie-break as the pre-bucketed
-    all-mentions loop (the a_type != c_type arm is now structural)."""
-    typo_min = cfg.typo_min_score
-    for a_surf, a_begin, a_ntoks, a_toks, a_set in occs:
+    An antecedent is a longer surface with at least as many content
+    tokens that contains every alias token; among several, the nearest
+    preceding one wins, then the lexicographically smallest.  A
+    Jaro-Winkler arm for single-token typo variants could
+    never fire here: two one-token sets that share a token are equal,
+    so containment always holds first."""
+    for a_surf, a_begin, a_ntoks, a_set in occs:
         a_len = len(a_surf)
         best_key = None
-        best = None
-        for c_surf, c_begin, c_ntoks, _c_toks, c_set in occs:
+        for c_surf, c_begin, c_ntoks, c_set in occs:
             if (a_surf == c_surf
                     or a_ntoks > c_ntoks
                     or a_len >= len(c_surf)
-                    or not (a_set & c_set)):
-                continue
-            if a_set <= c_set:
-                score = 0.95
-            elif a_ntoks == 1 and c_ntoks == 1:
-                score = jaro_winkler_py(
-                    a_toks[0].lower(), _c_toks[0].lower())
-                if score < typo_min:
-                    continue
-            else:
+                    or not a_set <= c_set):
                 continue
             pref = (c_begin - a_begin if c_begin < a_begin
                     else -(1 << 40) - c_begin)
-            key = (-score, -pref, c_surf)
+            key = (-pref, c_surf)
             if best_key is None or key < best_key:
                 best_key = key
-                best = (a_type, a_surf, c_surf, score)
-        if best is not None:
-            best_rows.append(best)
+        if best_key is not None:
+            best_rows.append((a_type, a_surf, best_key[1]))
 
 
-def doc_links_py(mentions: list[Mention], initialisms: frozenset[str],
-                 cfg: EngineConfig) -> list[tuple]:
-    """Within-document alias resolution, identical to
-    operators/linking.alias_links (containment-first scoring, JW only
-    for single-token typo variants, nearest-preceding tie-break,
-    per-alias majority).  Rows are (ne_type, alias, canonical, score)
-    tuples (LINK_STRUCT order)."""
+def doc_links_py(mentions: list[Mention],
+                 initialisms: frozenset[str]) -> list[tuple]:
+    """Within-document alias resolution: same-type containment of
+    content tokens (gazetteer initialisms excluded), nearest-preceding
+    tie-break, per-alias majority.  Rows are (ne_type, alias,
+    canonical, score) tuples (LINK_STRUCT order); every link is a
+    containment, scored 0.95 like the SQL mirror's first arm."""
     # candidate pairs only ever form within one ne_type, so bucket by
     # type up front: the scoring loop is quadratic per bucket instead
     # of quadratic over the whole document's mentions
     by_type: dict[str, list[tuple]] = {}
     for m in mentions:
-        # dedup while preserving order: the DataFrame path's
-        # array_except dedups, so repeated tokens in a surface must
-        # not skew the len(toks) ordering filter here (row-level
-        # parity contract, ADVICE r01)
-        toks = list(dict.fromkeys(
-            t for t in m.surface.split(" ") if t not in initialisms))
+        # dedup: repeated tokens in a surface must not skew the n_toks
+        # ordering filter (the SQL mirror's list_distinct does the
+        # same; ADVICE r01)
+        toks = {t for t in m.surface.split(" ") if t not in initialisms}
         if toks:
-            # (surface, begin_tok, n_toks, toks, tokset)
+            # (surface, begin_tok, n_toks, tokset)
             by_type.setdefault(m.ne_type, []).append(
-                (m.surface, m.begin_tok, len(toks), toks, set(toks)))
+                (m.surface, m.begin_tok, len(toks), toks))
     best_rows: list[tuple] = []
     for a_type, occs in by_type.items():
         if len(occs) < 2:
             continue
-        _links_for_type(a_type, occs, cfg, best_rows)
-    # per-(type, alias) majority over occurrences; tie -> max score,
-    # then lexicographic canonical
-    agg: dict[tuple, dict[str, list]] = {}
-    for ne_type, alias, canonical, score in best_rows:
+        _links_for_type(a_type, occs, best_rows)
+    # per-(type, alias) majority over occurrences; tie ->
+    # lexicographic canonical
+    agg: dict[tuple, dict[str, int]] = {}
+    for ne_type, alias, canonical in best_rows:
         d = agg.setdefault((ne_type, alias), {})
-        d.setdefault(canonical, []).append(score)
+        d[canonical] = d.get(canonical, 0) + 1
     out = []
     for (ne_type, alias), cands in sorted(agg.items()):
-        canonical, scores = min(
-            cands.items(),
-            key=lambda kv: (-len(kv[1]), -max(kv[1]), kv[0]))
-        out.append((ne_type, alias, canonical, max(scores)))
+        canonical = min(cands, key=lambda c: (-cands[c], c))
+        out.append((ne_type, alias, canonical, 0.95))
     return out
 
 
@@ -371,7 +362,7 @@ def process_document_py(text: str | None, gaz: dict,
     classify_table(tt, gaz)
     refine_table(tt, cfg)
     mentions = doc_mentions_py(tt)
-    links = doc_links_py(mentions, initialisms, cfg)
+    links = doc_links_py(mentions, initialisms)
     link_map = {(ne_type, alias): canonical
                 for ne_type, alias, canonical, _score in links}
     surfaces, hub_pairs = doc_surfaces_py(mentions, links)

@@ -31,7 +31,7 @@ from tildener_spark.config import EngineConfig
 from tildener_spark.diag import stage_mark as _stage_mark
 from tildener_spark.operators.components import connected_components
 from tildener_spark.operators.linking import (
-    alias_links, jaro_winkler, lsh_candidate_pairs,
+    jaro_winkler, lsh_candidate_pairs,
 )
 
 SEP = "␟"  # unit-separator; never appears in surfaces
@@ -72,7 +72,7 @@ def corrections_from_cc(hub_cc: DataFrame) -> DataFrame:
 def fused_canonical_tables(mention_hub: DataFrame,
                            corr: DataFrame) -> tuple[DataFrame,
                                                      DataFrame]:
-    """Broadcast-correction canonicalization (the fused fast path):
+    """Broadcast-correction canonicalization:
     (mention_hub = (url, ne_type, surface, hub), corr) ->
     (mapping, components).  The correction table is broadcast (if a
     pathological corpus made it large, AQE would still execute the
@@ -142,124 +142,69 @@ def score_cross_pairs(cand: DataFrame,
     )
 
 
-def build_entity_graph(mentions: DataFrame,
-                       cfg: EngineConfig | None = None,
-                       initialisms: frozenset[str] | set[str] = frozenset(),
-                       links: DataFrame | None = None,
-                       surfaces: DataFrame | None = None,
-                       hub_pairs: DataFrame | None = None,
-                       counters: dict | None = None) -> dict:
-    """mentions -> {links, edges, components, entities, mapping}.
-
-    ``links`` / ``surfaces`` / ``hub_pairs`` may be precomputed by the
-    fused per-document pass (operators/document.py): ``surfaces``
-    carries (url, ne_type, surface, doc_canonical) — the alias
-    resolution that is otherwise a distinct + left join here — and
-    ``hub_pairs`` the per-doc alias-chain hub edges.  With them the
-    whole pre-CC graph stage is narrow projections; without, the
-    DataFrame-join path runs (the oracle-parity variant)."""
+def cross_doc_vocab(resolved: DataFrame,
+                    cfg: EngineConfig | None = None) -> DataFrame:
+    """(ne_type, surface) vocabulary the cross-document stage blocks
+    over: the distinct doc-canonical surfaces of ``resolved`` (url,
+    ne_type, surface, doc_canonical) at least ``cross_doc_min_len``
+    long — orders of magnitude smaller than the mention table."""
     cfg = cfg or EngineConfig()
-    # links is consumed by resolved, alias_edges and hub_pairs (x2);
-    # the join path contains window functions + a pandas UDF —
-    # materialize once (the fused path's links are a narrow projection
-    # of the already-persisted docs table, cheap to recompute)
-    if links is None:
-        links = alias_links(mentions, cfg, initialisms).persist()
+    return (resolved
+            .select("ne_type", F.col("doc_canonical").alias("surface"))
+            .filter(F.length("surface") >= cfg.cross_doc_min_len)
+            .distinct())
 
-    if surfaces is not None:
-        # fused fast path: distinct + alias resolution happened
-        # per-document inside the Arrow pass — zero shuffles here
-        resolved = surfaces.select(
-            "url", "ne_type", "surface", "doc_canonical")
-    else:
-        groups = mentions.select("url", "ne_type", "surface").distinct()
-        # doc-canonical surface: alias -> antecedent, others -> self
-        resolved = (
-            groups.join(
-                links.select("url", "ne_type",
-                             F.col("alias").alias("surface"),
-                             F.col("canonical")),
-                ["url", "ne_type", "surface"], "left")
-            .withColumn("doc_canonical", F.coalesce("canonical", "surface"))
-            .drop("canonical")
-        )
+
+def build_entity_graph(surfaces: DataFrame, hub_pairs: DataFrame,
+                       cfg: EngineConfig | None = None,
+                       counters: dict | None = None) -> dict:
+    """Per-document graph inputs -> {components, entities, mapping,
+    corrections}.
+
+    Both inputs come from the fused per-document pass
+    (operators/document.py): ``surfaces`` (url, ne_type, surface,
+    doc_canonical) carries each document's alias resolution, and
+    ``hub_pairs`` (src, dst) the hub edges its alias chains induce.
+    So the pre-CC graph stage is narrow projections; the only global
+    work is cross-document linking and connected components over hub
+    nodes.  The DuckDB mirror ``_kg_graph_sql`` in __spark_entry__.py
+    re-derives the same entity table from the mention and link tables
+    by joins."""
+    cfg = cfg or EngineConfig()
+    resolved = surfaces.select(
+        "url", "ne_type", "surface", "doc_canonical")
     # ---- star contraction before CC (the 10^12-scale move) --------
     # Every mention node has exactly one hub edge (its doc-canonical
-    # surface), so the mention->hub stars are contracted *first* with
-    # plain joins; the iterative CC then runs only on the hub-hub
-    # multigraph induced by alias chains — typically orders of
-    # magnitude smaller than the mention graph (and empty when no doc
-    # contains chained aliases).  This bounds CC input by the number
-    # of *linked surface pairs*, not by corpus size.
-    alias_edges = links.select(
-        _mention_node(F.col("url"), F.col("ne_type"), F.col("alias"))
-        .alias("src"),
-        _mention_node(F.col("url"), F.col("ne_type"), F.col("canonical"))
-        .alias("dst"),
-    )
-    hub_edges = resolved.select(
-        _mention_node(F.col("url"), F.col("ne_type"), F.col("surface"))
-        .alias("src"),
-        _hub_node(F.col("ne_type"), F.col("doc_canonical")).alias("dst"),
-    )
-    graph_edges = alias_edges.union(hub_edges)
-
+    # surface), so the mention->hub stars are contracted up front; the
+    # iterative CC then runs only on the hub-hub multigraph induced by
+    # alias chains — typically orders of magnitude smaller than the
+    # mention graph (and empty when no doc contains chained aliases).
+    # This bounds CC input by the number of *linked surface pairs*,
+    # not by corpus size.
     mention_hub = resolved.select(
         "url", "ne_type", "surface",
         _hub_node(F.col("ne_type"), F.col("doc_canonical")).alias("hub"),
     )
-    if surfaces is None:
-        # reused by hub_pairs (x2), components, mapping; the fused
-        # variant is a narrow projection of the cached docs table —
-        # caching it again would only duplicate memory
-        mention_hub = mention_hub.persist()
-    if hub_pairs is None:
-        # hub-hub edges: an alias mention and its antecedent may
-        # resolve to different hubs only through a chain (A aliases B
-        # aliases C)
-        hub_pairs = (
-            links
-            .join(mention_hub.withColumnRenamed("surface", "alias")
-                  .withColumnRenamed("hub", "hub_a"),
-                  ["url", "ne_type", "alias"])
-            .join(mention_hub.withColumnRenamed("surface", "canonical")
-                  .withColumnRenamed("hub", "hub_c"),
-                  ["url", "ne_type", "canonical"])
-            .filter(F.col("hub_a") != F.col("hub_c"))
-            .select(F.col("hub_a").alias("src"), F.col("hub_c").alias("dst"))
-            .distinct()
-        )
-    else:
-        hub_pairs = hub_pairs.select("src", "dst").distinct()
+    hub_pairs = hub_pairs.select("src", "dst").distinct()
 
-    if cfg.cross_doc_linking:
-        # north-star cross-document linking: minhash-LSH blocking over
-        # the global (type, doc-canonical) surface vocabulary +
-        # Jaro-Winkler scoring; accepted near-duplicate surfaces
-        # (typos, diacritic variants) become extra hub-hub edges so CC
-        # merges them into one canonical entity.  The vocabulary is
-        # the distinct doc-canonical set — orders of magnitude smaller
-        # than the mention table — and the per-band bucket cap +
-        # AQE skew join guard the self-join (SURVEY.md §4.3.2).
-        vocab = (
-            resolved.select(
-                "ne_type", F.col("doc_canonical").alias("surface"))
-            .filter(F.length("surface") >= cfg.cross_doc_min_len)
-            .distinct()
-        )
-        lsh_handles: list = []
-        _stage_mark("graph_plan_build")
-        cand = lsh_candidate_pairs(vocab, cfg, handles=lsh_handles,
-                                   counters=counters)
-        _stage_mark("lsh_banding_materialize")
-        scored = score_cross_pairs(cand, cfg)
-        cross_edges = scored.select(
-            _hub_node(F.col("ne_type"), F.col("a")).alias("src"),
-            _hub_node(F.col("ne_type"), F.col("b")).alias("dst"),
-        )
-        hub_pairs = hub_pairs.unionByName(cross_edges)
-    else:
-        lsh_handles = []
+    # north-star cross-document linking: minhash-LSH blocking over the
+    # global (type, doc-canonical) surface vocabulary + Jaro-Winkler
+    # scoring; accepted near-duplicate surfaces (typos, diacritic
+    # variants) become extra hub-hub edges so CC merges them into one
+    # canonical entity.  The per-band bucket cap + AQE skew join guard
+    # the self-join (SURVEY.md §4.3.2).
+    vocab = cross_doc_vocab(resolved, cfg)
+    lsh_handles: list = []
+    _stage_mark("graph_plan_build")
+    cand = lsh_candidate_pairs(vocab, cfg, handles=lsh_handles,
+                               counters=counters)
+    _stage_mark("lsh_banding_materialize")
+    scored = score_cross_pairs(cand, cfg)
+    cross_edges = scored.select(
+        _hub_node(F.col("ne_type"), F.col("a")).alias("src"),
+        _hub_node(F.col("ne_type"), F.col("b")).alias("dst"),
+    )
+    hub_pairs = hub_pairs.unionByName(cross_edges)
     hub_cc = connected_components(hub_pairs, cfg)
     _stage_mark("connected_components")
     # CC materialized its (localCheckpointed) labels, so the LSH
@@ -268,56 +213,17 @@ def build_entity_graph(mentions: DataFrame,
     for h in lsh_handles:
         h.unpersist()
 
-    if surfaces is not None:
-        # ---- fused fast path: broadcast-correction canonicalization.
-        # The component representative is the lexicographically
-        # smallest hub = "g:<type>␟<canonical>", so component id ==
-        # hub-of-canonical, and the ONLY global state needed is the
-        # tiny table of alias-chain hubs whose component rep differs
-        # from themselves.  That table is broadcast (it is bounded by
-        # the number of chained alias pairs, not by corpus size; if a
-        # pathological corpus made it large, AQE would still execute
-        # the same join hash-partitioned by dropping the hint).
-        corr = corrections_from_cc(hub_cc)
-        mapping, components = fused_canonical_tables(mention_hub, corr)
-    else:
-        # hub -> component (hubs outside any alias chain are their own)
-        hub_component = (
-            mention_hub.select(F.col("hub")).distinct()
-            .join(hub_cc.withColumnRenamed("node", "hub"), "hub", "left")
-            .withColumn("component", F.coalesce("component", "hub"))
-        )
-        components = (
-            mention_hub
-            .join(hub_component, "hub")
-            .select(
-                _mention_node(F.col("url"), F.col("ne_type"),
-                              F.col("surface")).alias("node"),
-                "component")
-            .union(hub_component.select(F.col("hub").alias("node"),
-                                        "component"))
-        )
-
-        # canonical entity per component = smallest hub node id
-        reps = (
-            hub_component
-            .groupBy("component")
-            .agg(F.min("hub").alias("rep"))
-            .withColumn("parts",
-                        F.split(F.substring("rep", 3, 1 << 20), SEP))
-            .select(
-                "component",
-                F.col("parts")[0].alias("ne_type"),
-                F.col("parts")[1].alias("canonical"),
-            )
-        )
-        # mention node -> canonical surface mapping
-        mapping = (
-            mention_hub
-            .join(hub_component, "hub")
-            .join(reps.withColumnRenamed("ne_type", "_t"), "component")
-            .select("url", "ne_type", "surface", "canonical", "component")
-        )
+    # ---- broadcast-correction canonicalization.  The component
+    # representative is the lexicographically smallest hub =
+    # "g:<type>␟<canonical>", so component id == hub-of-canonical, and
+    # the ONLY global state needed is the tiny table of alias-chain
+    # hubs whose component rep differs from themselves.  That table is
+    # broadcast (it is bounded by the number of chained alias pairs,
+    # not by corpus size; if a pathological corpus made it large, AQE
+    # would still execute the same join hash-partitioned by dropping
+    # the hint).
+    corr = corrections_from_cc(hub_cc)
+    mapping, components = fused_canonical_tables(mention_hub, corr)
     entities = (
         mapping.groupBy("component", "ne_type", "canonical")
         .agg(
@@ -326,30 +232,11 @@ def build_entity_graph(mentions: DataFrame,
         )
     )
     return {
-        "links": links,
-        "graph_edges": graph_edges,
         "components": components,
         "entities": entities,
         "mapping": mapping,
-        "corrections": corr if surfaces is not None else None,
+        "corrections": corr,
     }
-
-
-def canonicalize_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Rewrite triple subj/obj surfaces to canonical entity names."""
-    subj_map = mapping.select(
-        "url", F.col("ne_type").alias("subj_type"),
-        F.col("surface").alias("subj"), F.col("canonical").alias("subj_canonical"))
-    obj_map = mapping.select(
-        "url", F.col("ne_type").alias("obj_type"),
-        F.col("surface").alias("obj"), F.col("canonical").alias("obj_canonical"))
-    return (
-        triples
-        .join(subj_map, ["url", "subj_type", "subj"], "left")
-        .join(obj_map, ["url", "obj_type", "obj"], "left")
-        .withColumn("subj_canonical", F.coalesce("subj_canonical", "subj"))
-        .withColumn("obj_canonical", F.coalesce("obj_canonical", "obj"))
-    )
 
 
 def canonicalize_triples_fused(triples_dc: DataFrame,
@@ -357,8 +244,9 @@ def canonicalize_triples_fused(triples_dc: DataFrame,
     """Fused-path canonicalization: the triples already carry their
     within-doc canonicals (subj_dc/obj_dc from the Arrow pass), so the
     global rewrite is two broadcast joins against the alias-chain
-    correction table — no mention-table shuffle.  Output columns match
-    :func:`canonicalize_triples` (internal _dc columns dropped)."""
+    correction table — no mention-table shuffle.  Output: the triple
+    columns plus subj_canonical/obj_canonical (internal _dc columns
+    dropped)."""
     s_corr = corrections.select(
         F.col("hub").alias("_s_hub"),
         F.col("corr_canonical").alias("_s_can"))

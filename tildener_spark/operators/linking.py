@@ -1,31 +1,25 @@
-"""Entity linking: blocking + candidate scoring + alias resolution.
+"""Entity linking primitives: Jaro-Winkler scoring and minhash-LSH
+blocking for the cross-document stage.
 
-New-engine stage (north_rule): link alias mentions (e.g. bare last
-name "Bērziņš") to their canonical antecedent ("Jānis Bērziņš").
+New-engine stage (north_rule).  Within-document alias resolution
+(bare last name "Bērziņš" -> antecedent "Jānis Bērziņš") runs inside
+the fused per-document pass (operators/document.py doc_links_py); this
+module serves the global step that merges near-duplicate surfaces
+across documents (typos, diacritic variants):
 
-Two candidate generators, both pure DataFrame:
-
-  1. **within-document token blocking** — mentions of the same url +
-     ne_type sharing a full token.  The join key is (url, token), so
-     it is co-partitioned by url and cannot skew globally (a head
-     token like "SIA" only fans out within one document).
-  2. **global minhash-LSH blocking** over character shingles — the
-     scale path for cross-document near-duplicate surfaces (typos,
-     diacritic variants).  b bands × r rows; banding is an
-     Arrow-batched numpy pandas UDF (codepoint windows → polynomial
-     base hash → 32 affine hashes → per-band minima), the same form
-     as similarity.lsh_topk's table_buckets — an earlier
-     interpreted-higher-order-expression variant measured ~0.4 ms/row
-     and kept this stage opt-out.  Band buckets with more than
-     ``max_bucket`` members are dropped (standard LSH skew guard);
-     AQE skew-join handles the rest.
-
-Scoring: token-containment (score 0.95) or Jaro-Winkler similarity —
-numpy-vectorized pandas UDF over the candidate pair batch (greedy
-match assignment runs as O(max_len) batched tensor steps, not a
-per-pair Python loop).  An alias resolves to the best-scoring
-antecedent, ties broken by proximity (most recent preceding mention),
-then lexicographically — documented determinism (SURVEY.md §4.3.4).
+  * **minhash-LSH blocking** over character shingles of the
+    vocabulary — b bands × r rows; banding is an Arrow-batched numpy
+    pandas UDF (codepoint windows → polynomial base hash → 32 affine
+    hashes → per-band minima), the same form as
+    similarity.lsh_topk's table_buckets — an earlier
+    interpreted-higher-order-expression variant measured ~0.4 ms/row
+    and kept this stage opt-out.  Band buckets with more than
+    ``max_bucket`` members are dropped (standard LSH skew guard);
+    AQE skew-join handles the rest.
+  * **Jaro-Winkler scoring** — numpy-vectorized pandas UDF over the
+    candidate pair batch (greedy match assignment runs as O(max_len)
+    batched tensor steps, not a per-pair Python loop), with the
+    scalar :func:`jaro_winkler_py` as its reference form.
 """
 
 from __future__ import annotations
@@ -346,119 +340,4 @@ def lsh_candidate_pairs(entities: DataFrame, cfg: EngineConfig | None = None,
             F.col(f"b.{id_col}").alias("b"),
         )
         .distinct()
-    )
-
-
-# --------------------------------------------- within-doc alias linking
-
-def alias_links(mentions: DataFrame,
-                cfg: EngineConfig | None = None,
-                initialisms: frozenset[str] | set[str] = frozenset()) -> DataFrame:
-    """Resolve alias mentions to antecedents within each document.
-
-    Returns one row per resolved alias *surface*:
-      (url, ne_type, alias, canonical, score)
-
-    Candidates: same (url, ne_type), different surface, sharing a full
-    token (blocking join on (url, ne_type, token) — co-partitioned by
-    url).  Accept when alias tokens ⊆ antecedent tokens (score 0.95)
-    or Jaro-Winkler ≥ cfg.typo_min_score (single-token pairs only);
-    the shorter surface is the alias.  Best antecedent per alias occurrence by (score desc,
-    preceding-and-nearest, surface).
-
-    ``initialisms`` (the gazetteer's ORG_INIT entries, e.g. SIA/AS)
-    are excluded from blocking and scoring: "SIA Grauds" must NOT
-    link to "SIA Banka" off the shared initialism, and "Banka" must
-    link to "SIA Banka" via containment of *content* tokens."""
-    cfg = cfg or EngineConfig()
-    inits = F.array(*[F.lit(x) for x in sorted(initialisms)]) \
-        if initialisms else F.array().cast("array<string>")
-    m = (
-        mentions.select(
-            "url", "ne_type", "surface", "begin_tok",
-            F.array_except(F.split(F.col("surface"), " "), inits)
-            .alias("toks"),
-        )
-        .filter(F.size("toks") > 0)
-    )
-    tok = m.select(
-        "url", "ne_type", "surface", "begin_tok", "toks",
-        F.explode("toks").alias("tk"),
-    )
-    a = tok.alias("a")
-    c = tok.select("url", "ne_type", "surface", "begin_tok", "toks", "tk") \
-           .alias("c")
-    pairs = (
-        a.join(c, ["url", "ne_type", "tk"])
-        .filter(
-            (F.col("a.surface") != F.col("c.surface"))
-            & (F.size("a.toks") <= F.size("c.toks"))
-            & (F.length("a.surface") < F.length("c.surface"))
-        )
-        .select(
-            "url", "ne_type",
-            F.col("a.surface").alias("alias"),
-            F.col("a.begin_tok").alias("alias_tok"),
-            F.col("a.toks").alias("alias_toks"),
-            F.col("c.surface").alias("canonical"),
-            F.col("c.begin_tok").alias("canon_tok"),
-            F.col("c.toks").alias("canon_toks"),
-        )
-        # NOTE: no distinct() here — pairs sharing several tokens
-        # appear multiple times, but the per-occurrence row_number and
-        # the per-alias majority groupBy below collapse duplicates; a
-        # distinct over rows carrying array columns is a gratuitous
-        # wide shuffle
-    )
-    # Acceptance is containment-first: an alias must be a strict
-    # sub-phrase of its antecedent ("Bērziņš" ⊂ "Jānis Bērziņš").
-    # Jaro-Winkler is allowed only for single-token vs single-token
-    # pairs (typo/diacritic variants) at a high bar — full names that
-    # merely share a first name ("Elīna Rozīte" / "Elīna Balodis")
-    # must NOT link.
-    contained = F.size(F.array_except("alias_toks", "canon_toks")) == 0
-    single_pair = (F.size("alias_toks") == 1) & (F.size("canon_toks") == 1)
-    # Split the scoring paths so the pandas UDF only ever sees the
-    # single-token-vs-single-token slice (typo variants) — running
-    # Python over the full candidate set would dominate the stage:
-    #   contained            -> score 0.95, no UDF
-    #   single & !contained  -> Jaro-Winkler UDF, tiny row count
-    #   everything else      -> cannot link, dropped JVM-side
-    cont_scored = pairs.filter(contained).withColumn(
-        "score", F.lit(0.95))
-    jw_scored = (
-        pairs.filter(~contained & single_pair)
-        .withColumn(
-            "score",
-            jaro_winkler(
-                F.lower(F.array_join("alias_toks", " ")),
-                F.lower(F.array_join("canon_toks", " ")),
-            ),
-        )
-        .filter(F.col("score") >= cfg.typo_min_score)
-    )
-    scored = cont_scored.unionByName(jw_scored)
-    # best antecedent per alias occurrence: highest score, then nearest
-    # preceding (largest canon_tok < alias_tok), then lexicographic
-    pref = F.when(F.col("canon_tok") < F.col("alias_tok"),
-                  F.col("canon_tok") - F.col("alias_tok")) \
-            .otherwise(F.lit(-(1 << 40)) - F.col("canon_tok"))
-    w = Window.partitionBy("url", "ne_type", "alias", "alias_tok").orderBy(
-        F.desc("score"), F.desc(pref), F.asc("canonical"))
-    best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    # one canonical per alias surface per doc: majority over occurrences,
-    # tie -> lexicographic
-    agg = (
-        best.groupBy("url", "ne_type", "alias", "canonical")
-        .agg(F.count(F.lit(1)).alias("n"), F.max("score").alias("score"))
-    )
-    w2 = Window.partitionBy("url", "ne_type", "alias").orderBy(
-        F.desc("n"), F.desc("score"), F.asc("canonical"))
-    return (
-        agg.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") == 1)
-        .select("url", "ne_type", "alias", "canonical", "score")
     )

@@ -16,6 +16,15 @@ then one hash aggregate per (url, span_grp).  Entirely whole-stage
 codegen; the only shuffle is the groupBy on (url, span_grp), and since
 url is the leading key it co-partitions with every other doc-local
 aggregate downstream.
+
+Why a DataFrame form stays next to the fused pass
+(operators/document.py doc_mentions_py, the production span
+assembly): its callers feed tagged-token tables that never come from
+text — gold BIO columns (tests/test_reference_fixtures.py,
+scripts/refinement_ablation.py), the ablation's planted-noise tokens
+and hand-built tag runs (tests/test_spans.py) — and
+tests/test_properties.py checks the fused pass against it on
+adversarial documents.
 """
 
 from __future__ import annotations

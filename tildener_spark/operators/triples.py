@@ -1,96 +1,22 @@
-"""(subj, pred, obj) triple extraction within sentence windows.
+"""Triple-extraction quality: set-based P/R/F1 against gold triples.
 
-New-engine stage mandated by the north rule (the reference stops at NE
-tagging; triple extraction is the KG-construction extension).  Two
-deterministic rules over the `mentions` and `tokens` tables:
+Triple extraction itself — the new-engine stage mandated by the north
+rule (the reference stops at NE tagging) — runs inside the fused
+per-document pass (operators/document.py doc_triples_py), with two
+deterministic rules over consecutive mentions of a sentence:
 
-  * pattern triple — two *consecutive* mentions of a sentence with at
-    least one verb token strictly between them: pred = lemma of the
-    first such verb;
-  * co-occurrence triple — consecutive mention pair with no verb
-    between: pred = 'co_occurs'.
+  * pattern triple — at least one verb token strictly between the
+    pair: pred = lemma of the first such verb;
+  * co-occurrence triple — no verb between: pred = 'co_occurs'.
 
-Pure DataFrame plan, no UDFs:
-  - consecutive pairs via lead() over Window(url, sent_id) — no
-    mention×mention self-join, so no quadratic blowup on
-    mention-heavy sentences;
-  - the verb lookup is a range join on (url, sent_id) + tok_id
-    between-bounds, aggregated with min_by to pick the first verb;
-    (url, sent_id) equi-keys keep it a hash join, the range is a
-    post-join filter — at 100 TB the join is co-partitioned by url
-    and never broadcasts the big side.
-
-prob = min of the two mention probabilities (FIXTURES.md §6).
+prob = min of the two mention probabilities (FIXTURES.md §6).  The
+DuckDB mirror ``_kg_triples_sql`` in __spark_entry__.py re-derives the
+same triples relationally from the mention and token tables.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
-
-TRIPLE_COLUMNS = [
-    "url", "sent_id", "subj", "subj_type", "pred", "obj", "obj_type",
-    "prob", "kind",
-]
-
-
-def mention_pairs(mentions: DataFrame) -> DataFrame:
-    """Consecutive same-sentence mention pairs via lead()."""
-    w = Window.partitionBy("url", "sent_id").orderBy("begin_tok")
-    return (
-        mentions
-        .withColumn("obj", F.lead("surface").over(w))
-        .withColumn("obj_type", F.lead("ne_type").over(w))
-        .withColumn("obj_begin", F.lead("begin_tok").over(w))
-        .withColumn("obj_prob", F.lead("avg_prob").over(w))
-        .filter(F.col("obj").isNotNull())
-        .select(
-            "url", "sent_id",
-            F.col("surface").alias("subj"),
-            F.col("ne_type").alias("subj_type"),
-            F.col("end_tok").alias("subj_end"),
-            "obj", "obj_type", "obj_begin",
-            F.least("avg_prob", "obj_prob").alias("prob"),
-        )
-    )
-
-
-def extract_triples(mentions: DataFrame, tokens: DataFrame) -> DataFrame:
-    """mentions + flat tokens -> triples DataFrame."""
-    pairs = mention_pairs(mentions)
-    verbs = (
-        tokens.filter(F.col("pos") == "VB")
-        .select("url", "sent_id",
-                F.col("tok_id").alias("v_tok"),
-                F.col("lemma").alias("v_lemma"))
-    )
-    joined = (
-        pairs.join(verbs, ["url", "sent_id"], "left")
-        .withColumn(
-            "v_between",
-            (F.col("v_tok") > F.col("subj_end"))
-            & (F.col("v_tok") < F.col("obj_begin")),
-        )
-    )
-    agg = (
-        joined.groupBy(
-            "url", "sent_id", "subj", "subj_type", "subj_end",
-            "obj", "obj_type", "obj_begin", "prob",
-        )
-        .agg(
-            F.min_by(
-                "v_lemma", F.when(F.col("v_between"), F.col("v_tok"))
-            ).alias("verb_lemma"),
-        )
-    )
-    return (
-        agg.withColumn(
-            "pred", F.coalesce("verb_lemma", F.lit("co_occurs")))
-        .withColumn(
-            "kind",
-            F.when(F.col("verb_lemma").isNotNull(), F.lit("pattern"))
-            .otherwise(F.lit("cooc")))
-        .select(*TRIPLE_COLUMNS)
-    )
+from pyspark.sql import DataFrame
 
 
 def triple_prf(predicted: DataFrame, gold: DataFrame) -> dict:

@@ -51,7 +51,7 @@ from tildener_spark.operators.document import (
 from tildener_spark.operators.components import connected_components
 from tildener_spark.operators.graph import (
     SEP, _hub_node, canonicalize_triples_fused, corrections_from_cc,
-    fused_canonical_tables, score_cross_pairs)
+    cross_doc_vocab, fused_canonical_tables, score_cross_pairs)
 from tildener_spark.operators.linking import lsh_candidate_pairs
 
 __all__ = ["read_stage", "rebuild_graph_stage",
@@ -107,11 +107,7 @@ def rebuild_graph_stage(spark: SparkSession, docs: DataFrame,
     resolved = _resolved(docs)
     hub_pairs = (docs.select(F.explode("doc.hub_pairs").alias("x"))
                  .select("x.*").select("src", "dst").distinct())
-    vocab = (resolved
-             .select("ne_type",
-                     F.col("doc_canonical").alias("surface"))
-             .filter(F.length("surface") >= cfg.cross_doc_min_len)
-             .distinct())
+    vocab = cross_doc_vocab(resolved, cfg)
     handles: list = []
     cand = lsh_candidate_pairs(vocab, cfg, handles=handles,
                                counters=counters)
@@ -245,13 +241,6 @@ def run_pipeline_incremental(
         .select("x.*").select("src", "dst").distinct())
 
     # ---- vocabulary delta + new-pair-only linking ----------------
-    def vocab(resolved):
-        return (resolved
-                .select("ne_type",
-                        F.col("doc_canonical").alias("surface"))
-                .filter(F.length("surface") >= cfg.cross_doc_min_len)
-                .distinct())
-
     if hub_components is not None:
         # the hub node-id set IS the prior doc-canonical vocabulary
         # ("g:<type>␟<canonical>") — no docs scan needed
@@ -266,8 +255,8 @@ def run_pipeline_incremental(
             .persist()
         )
     else:
-        v_prior = vocab(resolved_prior).persist()
-    v_new = (vocab(resolved_delta)
+        v_prior = cross_doc_vocab(resolved_prior, cfg).persist()
+    v_new = (cross_doc_vocab(resolved_delta, cfg)
              .join(v_prior, ["ne_type", "surface"], "left_anti")
              .persist())
     n_new = v_new.count()

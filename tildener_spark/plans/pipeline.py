@@ -3,19 +3,20 @@
 Spark re-expression of NEMuc7TagPlaintext.pl (SURVEY.md §3.1) extended
 with the north-rule KG stages:
 
-    pages ─ extract_text ─ tokenize_pos ─ classify ─ refine ──┐
-      (one narrow stage: all four are per-row column maps      │
-       over the nested token array — zero shuffles)            │
-                                                               ▼
-    explode ─ assemble_spans (1 shuffle: groupBy url,span_grp) ─ mentions
-    mentions ─ extract_triples (window + verb range join)      ─ triples
-    mentions ─ alias_links ─ connected_components              ─ entities
-    triples × mapping ─ canonicalize ─ aggregate               ─ edges
+    pages ─ process_document ──────────────────────────────────── docs
+      (ONE Arrow pass per page, operators/document.py: tokenize,
+       classify, refine, span assembly, sentence-window triples,
+       within-doc alias linking — zero shuffles)
+    docs ─ explode ─ tokens / mentions / triples_dc / links
+    docs.surfaces ─ cross-doc LSH + Jaro-Winkler ─┐
+    docs.hub_pairs ───────────────────────────────┴─ connected_components
+      ─ corrections ─ mapping / entities
+    triples_dc × corrections (broadcast) ─ canonical_triples
 
-Stage boundaries are exactly the shuffles; with ``checkpoint_dir``
-set, each named stage materializes to parquet with per-partition
-lineage (plans/lineage.py) and a re-run resumes from the last
-completed stage — the kill-and-resume contract of BASELINE.md.
+The only shuffles are over the small cross-document tables.  With
+``checkpoint_dir`` set, each named stage materializes to parquet with
+per-partition lineage (plans/lineage.py) and a re-run resumes from the
+last completed stage — the kill-and-resume contract of BASELINE.md.
 """
 
 from __future__ import annotations
@@ -25,18 +26,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tildener_spark.config import EngineConfig
-from tildener_spark.functions.text import extract_text
-from tildener_spark.operators.classify import make_tag_pages_udf
 from tildener_spark.operators.document import (
     explode_docs, make_process_document_udf,
 )
 from tildener_spark.operators.graph import (
-    build_entity_graph, canonicalize_triples, canonicalize_triples_fused,
-    materialize_graph,
+    build_entity_graph, canonicalize_triples_fused, materialize_graph,
 )
-from tildener_spark.operators.spans import assemble_spans
 from tildener_spark.operators.tokenize import explode_tokens
-from tildener_spark.operators.triples import extract_triples
 from tildener_spark.diag import stage_mark as _stage_mark
 from tildener_spark.plans.lineage import checkpoint_stage
 
@@ -63,15 +59,11 @@ class PipelineResult:
 # stage -> the stage whose output it consumes (for rows_in);
 # self-mapped stages are per-row maps of the pipeline input
 _STAGE_INPUTS = {
-    "docs": "pages_clean", "tagged": "pages_clean",
+    "docs": "pages_clean",
     "mentions": "docs", "triples_dc": "docs",
     "links": "mentions", "entities": "mentions", "mapping": "mentions",
     "canonical_triples": "triples_dc",
-    # operator (fused=False) path
-    "triples": "mentions",
 }
-_STAGE_INPUTS_UNFUSED = {"mentions": "tagged",
-                         "canonical_triples": "triples"}
 
 
 def run_pipeline(
@@ -79,30 +71,19 @@ def run_pipeline(
     pages: DataFrame,
     gazetteer: DataFrame,
     cfg: EngineConfig | None = None,
-    reextract_text: bool = False,
-    fused: bool = True,
 ) -> PipelineResult:
-    """Run the full chain; lazily unless cfg.checkpoint_dir is set.
+    """Run the full chain over ``pages`` (url, lang, text); lazily
+    unless cfg.checkpoint_dir is set.
 
-    ``reextract_text``: recompute text from html (the production path;
-    off by default because the input table already carries text and
-    the byte-identity test asserts both agree).
-
-    ``fused`` (default, the production path): all document-local
-    stages — tokenize/classify/refine, span assembly, triple
-    extraction, alias linking — run in ONE Arrow pass per page
+    All document-local stages run in ONE Arrow pass per page
     (operators/document.py), so the job's only shuffles are over the
-    small cross-document tables.  ``fused=False`` runs the
-    DataFrame-operator path (spans.py / triples.py / linking.py), the
-    DuckDB-oracle parity variant; tests assert both paths agree.
+    small cross-document tables.  A caller holding html applies
+    ``functions.text.extract_text`` to ``pages`` first.
     """
     cfg = cfg or EngineConfig()
     ckpt = cfg.checkpoint_dir
     counters: dict[str, dict] = {}
     _stage_mark(None)  # reset the diagnostic stage clock
-
-    if reextract_text:
-        pages = pages.withColumn("text", extract_text("html"))
 
     # crawl-hygiene pre-filters (raw-crawl runs; off for curated
     # corpora).  Order matters: URL dedup first (cheap canonical-key
@@ -131,106 +112,75 @@ def run_pipeline(
         if hasattr(gazetteer, "collect") else list(gazetteer)
     )
 
-    links = surfaces = hub_pairs = None
-    if fused:
-        doc_udf = make_process_document_udf(gaz_rows, cfg, initialisms)
-        docs_full = pages.select(
-            "url", "lang", doc_udf(F.col("text")).alias("doc"))
-        if ckpt:
-            # one checkpoint covers all four document-local outputs;
-            # downstream stage tables are narrow re-projections of it.
-            # Stage name is distinct from the operator path's 'tagged'
-            # (incompatible schema: doc struct vs tokens column) so a
-            # resume never reads the wrong path's table (ADVICE r01).
-            # checkpoint_slices > 1 commits the stage as independent
-            # url-hash slices so a kill resumes per-slice.
-            docs = checkpoint_stage(
-                spark, docs_full, ckpt, "docs",
-                slices=cfg.checkpoint_slices, slice_key="url",
-                counters=counters)
-        else:
-            # cache a SLIM struct — everything downstream of the graph
-            # stage reads (triples/links/surfaces/hub_pairs) but NOT
-            # tokens (~40% of the serialized bytes) or mentions (~50%
-            # of the remainder: the fused pass already emits per-doc
-            # surfaces/links/hub_pairs, which is all the graph stage
-            # derives from mentions, and the bench/scaling path ends
-            # at canonical triples).  The slim UDF never builds or
-            # Arrow-serializes either field at all (emitting-then-
-            # pruning would still pay the Python->JVM transfer).
-            # ``tagged``/``mentions`` below stay projections of the
-            # UNCACHED full plan, so a consumer that does want them
-            # re-runs the document UDF once — at scale that consumer
-            # should use checkpoint mode, where the full docs stage
-            # (tokens + mentions included) is committed to parquet and
-            # every projection reads it back without recompute.
-            slim_udf = make_process_document_udf(
-                gaz_rows, cfg, initialisms, emit_tokens=False,
-                emit_mentions=False)
-            docs = pages.select(
-                "url", "lang", slim_udf(F.col("text")).alias("doc"),
-            ).persist()
-        tagged = (docs if ckpt else docs_full).select(
-            "url", "lang", F.col("doc.tokens").alias("tokens"))
-        mentions = explode_docs(docs if ckpt else docs_full, "mentions")
-        triples_dc = explode_docs(docs, "triples")
-        links = explode_docs(docs, "links")
-        # surfaces + hub_pairs feed the whole graph stage (vocab
-        # distinct, hub edges, mention->hub mapping) — carve them out
-        # of the big docs cache ONCE into a tiny cached projection so
-        # the graph stage's several consumers deserialize small rows
-        # instead of re-scanning full doc structs (tokens/mentions/
-        # triples dominate the row bytes)
-        graph_in = docs.select(
-            "url",
-            F.col("doc.surfaces").alias("surfaces"),
-            F.col("doc.hub_pairs").alias("hub_pairs"))
-        if not ckpt:
-            graph_in = graph_in.persist()
-        surfaces = (
-            graph_in.select("url", F.explode("surfaces").alias("x"))
-            .select("url", "x.*"))
-        hub_pairs = (
-            graph_in.select(F.explode("hub_pairs").alias("x"))
-            .select("x.*"))
-        if ckpt:
-            mentions = checkpoint_stage(spark, mentions, ckpt, "mentions",
-                                        counters=counters)
-            # 'triples_dc', not 'triples': carries subj_dc/obj_dc,
-            # which the operator path's triples table does not
-            triples_dc = checkpoint_stage(spark, triples_dc, ckpt,
-                                          "triples_dc", counters=counters)
-        # the exposed triples table matches the operator path's schema;
-        # the _dc annotations are internal to fused canonicalization
-        triples = triples_dc.drop("subj_dc", "obj_dc")
-        tokens = explode_tokens(tagged)
+    doc_udf = make_process_document_udf(gaz_rows, cfg, initialisms)
+    docs_full = pages.select(
+        "url", "lang", doc_udf(F.col("text")).alias("doc"))
+    if ckpt:
+        # one checkpoint covers all document-local outputs; downstream
+        # stage tables are narrow re-projections of it.
+        # checkpoint_slices > 1 commits the stage as independent
+        # url-hash slices so a kill resumes per-slice.
+        docs = checkpoint_stage(
+            spark, docs_full, ckpt, "docs",
+            slices=cfg.checkpoint_slices, slice_key="url",
+            counters=counters)
     else:
-        tag_udf = make_tag_pages_udf(gaz_rows, cfg)
-        tagged = pages.select(
-            "url", "lang", tag_udf(F.col("text")).alias("tokens"))
-        if ckpt:
-            tagged = checkpoint_stage(spark, tagged, ckpt, "tagged",
-                                      counters=counters)
-        else:
-            # the tagged table feeds three downstream branches (spans,
-            # triples' verb lookup, linking); without materialization
-            # each branch would re-run the whole UDF chain
-            tagged = tagged.persist()
+        # cache a SLIM struct — everything downstream of the graph
+        # stage reads (triples/links/surfaces/hub_pairs) but NOT
+        # tokens (~40% of the serialized bytes) or mentions (~50%
+        # of the remainder: the fused pass already emits per-doc
+        # surfaces/links/hub_pairs, which is all the graph stage
+        # derives from mentions, and the bench/scaling path ends
+        # at canonical triples).  The slim UDF never builds or
+        # Arrow-serializes either field at all (emitting-then-
+        # pruning would still pay the Python->JVM transfer).
+        # ``tagged``/``mentions`` below stay projections of the
+        # UNCACHED full plan, so a consumer that does want them
+        # re-runs the document UDF once — at scale that consumer
+        # should use checkpoint mode, where the full docs stage
+        # (tokens + mentions included) is committed to parquet and
+        # every projection reads it back without recompute.
+        slim_udf = make_process_document_udf(
+            gaz_rows, cfg, initialisms, emit_tokens=False,
+            emit_mentions=False)
+        docs = pages.select(
+            "url", "lang", slim_udf(F.col("text")).alias("doc"),
+        ).persist()
+    tagged = (docs if ckpt else docs_full).select(
+        "url", "lang", F.col("doc.tokens").alias("tokens"))
+    mentions = explode_docs(docs if ckpt else docs_full, "mentions")
+    triples_dc = explode_docs(docs, "triples")
+    links = explode_docs(docs, "links")
+    # surfaces + hub_pairs feed the whole graph stage (vocab
+    # distinct, hub edges, mention->hub mapping) — carve them out
+    # of the big docs cache ONCE into a tiny cached projection so
+    # the graph stage's several consumers deserialize small rows
+    # instead of re-scanning full doc structs (tokens/mentions/
+    # triples dominate the row bytes)
+    graph_in = docs.select(
+        "url",
+        F.col("doc.surfaces").alias("surfaces"),
+        F.col("doc.hub_pairs").alias("hub_pairs"))
+    if not ckpt:
+        graph_in = graph_in.persist()
+    surfaces = (
+        graph_in.select("url", F.explode("surfaces").alias("x"))
+        .select("url", "x.*"))
+    hub_pairs = (
+        graph_in.select(F.explode("hub_pairs").alias("x"))
+        .select("x.*"))
+    if ckpt:
+        mentions = checkpoint_stage(spark, mentions, ckpt, "mentions",
+                                    counters=counters)
+        # 'triples_dc', not 'triples': carries subj_dc/obj_dc
+        triples_dc = checkpoint_stage(spark, triples_dc, ckpt,
+                                      "triples_dc", counters=counters)
+    # the exposed triples table drops the _dc annotations, which are
+    # internal to canonicalization
+    triples = triples_dc.drop("subj_dc", "obj_dc")
+    tokens = explode_tokens(tagged)
 
-        tokens = explode_tokens(tagged)
-        mentions = assemble_spans(tokens)
-        if ckpt:
-            mentions = checkpoint_stage(spark, mentions, ckpt, "mentions",
-                                        counters=counters)
-        else:
-            mentions = mentions.persist()
-
-        triples = extract_triples(mentions, tokens)
-        if ckpt:
-            triples = checkpoint_stage(spark, triples, ckpt, "triples",
-                                       counters=counters)
-
-    if fused and not ckpt:
+    if not ckpt:
         # materialize the docs cache with ONE scan before the graph
         # stage: the first downstream action otherwise scans the cold
         # cache concurrently from several branches (hub_pairs, the CC
@@ -241,12 +191,10 @@ def run_pipeline(
         # within one job run concurrently when independent)
         docs.count()
         _stage_mark("docs_materialize")
-    graph = build_entity_graph(mentions, cfg, initialisms, links=links,
-                               surfaces=surfaces, hub_pairs=hub_pairs,
+    graph = build_entity_graph(surfaces, hub_pairs, cfg,
                                counters=counters)
     _stage_mark("graph_construct_eager_cc")
-    links, entities, mapping = (
-        graph["links"], graph["entities"], graph["mapping"])
+    entities, mapping = graph["entities"], graph["mapping"]
     if ckpt:
         links = checkpoint_stage(spark, links, ckpt, "links",
                                  counters=counters)
@@ -263,17 +211,11 @@ def run_pipeline(
             graph["components"].filter(F.col("node").startswith("g:"))
             .select("node", "component"),
             ckpt, "hub_components", counters=counters)
-    elif not fused:
-        mapping = mapping.persist()  # joined twice (subj + obj sides)
 
-    if fused:
-        # triples already carry within-doc canonicals; the global
-        # rewrite is two broadcast joins against the tiny alias-chain
-        # correction table — no mention-table shuffle
-        canon = canonicalize_triples_fused(triples_dc,
-                                           graph["corrections"])
-    else:
-        canon = canonicalize_triples(triples, mapping)
+    # triples already carry within-doc canonicals; the global rewrite
+    # is two broadcast joins against the tiny alias-chain correction
+    # table — no mention-table shuffle
+    canon = canonicalize_triples_fused(triples_dc, graph["corrections"])
     if ckpt:
         canon = checkpoint_stage(spark, canon, ckpt, "canonical_triples",
                                  counters=counters)
@@ -283,16 +225,9 @@ def run_pipeline(
         # persisted handles a long-lived caller can release once the
         # result DataFrames are consumed (unpersisting earlier would
         # force recompute from the docs cache — harmless but wasteful)
-        if fused:
-            extra["caches"] = [docs, graph_in]
-        else:
-            extra["caches"] = [tagged, mentions, mapping,
-                               graph["links"]]
+        extra["caches"] = [docs, graph_in]
     # rows_in per stage from the producing stage's rows_out (the
     # first stage is a per-row map, so its rows_in == rows_out)
-    inputs = dict(_STAGE_INPUTS)
-    if not fused:
-        inputs.update(_STAGE_INPUTS_UNFUSED)
     for st, c in counters.items():
         if "rows_out" not in c:
             # guard audit entries (e.g. lsh_bucket_guard) are not
@@ -303,7 +238,7 @@ def run_pipeline(
             # not observed (it would cost an extra pass), so rows_in
             # is deliberately left unset here
             continue
-        src = inputs.get(st)
+        src = _STAGE_INPUTS.get(st)
         if src is None or (src == "pages_clean" and src not in counters):
             # no producer stage (or pre-filters off): per-row map of
             # the pipeline input, rows_in == rows_out
